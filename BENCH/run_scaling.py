@@ -120,7 +120,7 @@ def main(n: int) -> None:
 
     def lineage_rows(res: dict) -> str:
         rows = [
-            f"| {r['pid']} | {r['docs']} | {r['bytes']} | {r['events']} | {r['wall_ms']} |"
+            f"| {r['pid']} | {r['docs']} | {r['bytes']} | {r['tags']} | {r['wall_ms']} |"
             for r in res["lineage"][:12]
         ]
         if len(res["lineage"]) > 12:
@@ -150,13 +150,13 @@ Reference single-node envelope (BASELINE.md): ~460 docs/sec/core,
 
 ## Per-partition lineage — local[{n}]
 
-| pid | docs | bytes | events | wall_ms |
+| pid | docs | bytes | tags | wall_ms |
 |---|---|---|---|---|
 {lineage_rows(low)}
 
 ## Per-partition lineage — local[{4*n}]
 
-| pid | docs | bytes | events | wall_ms |
+| pid | docs | bytes | tags | wall_ms |
 |---|---|---|---|---|
 {lineage_rows(high)}
 """

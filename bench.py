@@ -30,8 +30,10 @@ import subprocess
 import sys
 import time
 
+from htmlparser2_spark.session import local_cpus
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = local_cpus()
 REPLICATE = int(os.environ.get("BENCH_REPLICATE", "40"))
 WORK_DIR = os.environ.get("BENCH_WORK_DIR", "/tmp/htmlparser2_spark_bench")
 

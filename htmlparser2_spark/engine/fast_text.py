@@ -14,10 +14,10 @@ tests/test_fast_text.py over every golden input plus fuzz).
 
 from __future__ import annotations
 
-from .parser import Parser, ParserOptions
+from .parser import Parser
 from .tokenizer import Tokenizer
 
-__all__ = ["fast_text_content", "FastTextExtractor"]
+__all__ = ["fast_text_content", "FastTextExtractor", "TextHandler"]
 
 
 class _Bail(Exception):
@@ -112,12 +112,17 @@ class _FastHandler:
         pass
 
 
-class _FullTextHandler:
-    """Parser-level text collector for the fallback path."""
+class TextHandler:
+    """Parser-level text collector: textContent without building a DOM,
+    plus the open-tag count. ``parse()`` resets it per document
+    (``on_parser_init``), so one instance serves a whole batch."""
 
     __slots__ = ("parts", "n_tags")
 
     def __init__(self) -> None:
+        self.on_parser_init(None)
+
+    def on_parser_init(self, parser) -> None:
         self.parts: list[str] = []
         self.n_tags = 0
 
@@ -139,8 +144,8 @@ class FastTextExtractor:
     def __init__(self) -> None:
         self._fast = _FastHandler()
         self._tokenizer = Tokenizer(self._fast, light_attrs=True)
-        self._full = _FullTextHandler()
-        self._parser = Parser(self._full, ParserOptions())
+        self._full = TextHandler()
+        self._parser = Parser(self._full)
         self.n_fallbacks = 0
 
     def extract(self, doc: str) -> tuple[str, int]:
@@ -152,11 +157,8 @@ class FastTextExtractor:
             return "".join(fast.parts), fast.n_tags
         except _Bail:
             self.n_fallbacks += 1
-            full = self._full
-            full.parts.clear()
-            full.n_tags = 0
             self._parser.parse(doc)
-            return "".join(full.parts), full.n_tags
+            return "".join(self._full.parts), self._full.n_tags
 
 
 def fast_text_content(doc: str) -> str:

@@ -2,19 +2,29 @@
 
 All heavy work happens inside pandas UDFs over Arrow record batches — no
 per-row Python dispatch from Spark's side (BASELINE.json input_hint).
+Every parse UDF here, ``outer_html``/``inner_html`` (operators/domquery.py)
+and ``parse_pages`` (plans/extract_job.py) run one ``RENDERERS`` entry —
+one factory per output, building its handler and Parser once per batch —
+inside ``_map_docs``, the one per-document batch loop.
+
 Equivalents of the reference's API surface (/root/reference/src/index.ts):
 
 * ``extract_text_udf``  — parseDocument + DomUtils textContent, fused into
   a text-only handler (no DOM materialization) for the hot path
 * ``clean_text_udf``    — boilerplate-stripping variant
 * ``main_content_udf``  — readability-lite main-content block selection
+* ``markdown_udf``      — structure-keeping Markdown rendering
 * ``dom_nodes_udf``     — parseDocument as an adjacency node array
+* ``node_counts_udf``   — per-document DOM node-name histogram
 * ``parser_events_udf`` — the Handler event stream (testHelper shape)
-* ``feed_udf``          — parseFeed
+* ``feed_udf`` / ``sitemap_udf`` — parseFeed / sitemap records
 * ``doc_stats_udf``     — per-document node/text/event counters
 """
 
 from __future__ import annotations
+
+from functools import partial
+from operator import attrgetter
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -31,9 +41,19 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..engine.dom import DomArrayHandler, clean_text, inner_text
+from ..engine.dom import (
+    DomArrayHandler,
+    clean_text,
+    inner_html_of,
+    inner_text,
+    serialize,
+)
+from ..engine.encoding import decode_html
+from ..engine.fast_text import FastTextExtractor, TextHandler
 from ..engine.feed import get_feed
+from ..engine.markdown import to_markdown
 from ..engine.parser import Parser, ParserOptions
+from ..engine.readability import main_content_text
 from ..engine.sitemap import get_sitemap
 
 __all__ = [
@@ -64,25 +84,28 @@ def _to_str(value) -> str:
     return value or ""
 
 
-class _TextHandler:
-    """Text-only handler: textContent without building a DOM."""
+def _decode_sniffed(value) -> str:
+    return "" if value is None else decode_html(value)[1]
 
-    __slots__ = ("parts",)
 
-    def __init__(self) -> None:
-        self.parts: list[str] = []
-
-    def on_text(self, data: str) -> None:
-        self.parts.append(data)
+def _map_docs(values: pd.Series, render, *, sniff_charset: bool = False,
+              columns=None):
+    """Decode each value (NULL -> empty document; ``sniff_charset``: BOM +
+    meta prescan, engine/encoding.py) and ``render`` it. Returns a Series
+    aligned with ``values``, or a DataFrame when ``columns`` names the
+    rendered tuples' fields."""
+    decode = _decode_sniffed if sniff_charset else _to_str
+    # Series.__iter__ is slow; pull one plain list per batch.
+    out = [render(decode(v)) for v in values.tolist()]
+    if columns is None:
+        return pd.Series(out, index=values.index, dtype=object)
+    return pd.DataFrame(out, index=values.index, columns=columns)
 
 
 class _CountingHandler:
     """Counts events / nodes / text chars in one pass."""
 
     __slots__ = ("n_events", "n_tags", "n_text_chars", "max_depth", "_depth")
-
-    def __init__(self) -> None:
-        self.on_parser_init(None)
 
     def on_parser_init(self, parser) -> None:
         self.n_events = 0
@@ -128,9 +151,6 @@ class _NodeCountHandler:
 
     __slots__ = ("counts", "_text_open")
 
-    def __init__(self) -> None:
-        self.on_parser_init(None)
-
     def on_parser_init(self, parser) -> None:
         self.counts: dict = {}
         self._text_open = False
@@ -168,213 +188,8 @@ class _NodeCountHandler:
         self._inc(name)
 
 
-def _make_parser(handler, options: dict, *, batch_text: bool = False) -> Parser:
-    # batch_text=True opts in to the tokenizer's pre-decoded text-run
-    # batching (engine/parser.py __init__): only for handlers that
-    # consume neither per-event granularity nor per-entity positions —
-    # text/DOM-content extraction, feeds, node-name histograms.
-    # Event-stream and positional UDFs (parser_events_udf,
-    # doc_stats_udf, dom_nodes_udf) MUST keep the exact stream.
-    return Parser(handler, ParserOptions(**options), batch_text=batch_text)
-
-
-# ------------------------------------------------------------------
-# The pandas UDF factories take engine options and return a column fn.
-# A fresh Parser is reused across the batch (reset per document), so
-# per-row setup cost is one object reset, not object construction.
-
-
-def extract_text_udf(**options):
-    @F.pandas_udf(StringType())
-    def _extract(html: pd.Series) -> pd.Series:
-        if not options:
-            # Default HTML options: tokenizer-only fast path (~2x),
-            # bails to the full parser on foreign content.
-            from ..engine.fast_text import FastTextExtractor
-
-            extractor = FastTextExtractor()
-
-            def one(value) -> str:
-                return extractor.extract(_to_str(value))[0]
-
-        else:
-            handler = _TextHandler()
-            parser = _make_parser(handler, options, batch_text=True)
-
-            def one(value) -> str:
-                handler.parts.clear()
-                parser.parse(_to_str(value))
-                return "".join(handler.parts)
-
-        return html.map(one)
-
-    return _extract
-
-
-def inner_text_udf(**options):
-    @F.pandas_udf(StringType())
-    def _inner(html: pd.Series) -> pd.Series:
-        # One handler+parser per batch; parse() resets them per document
-        # (on_parser_init re-inits the tree, like the reference
-        # DomHandler), so per-row cost is a state reset, never object
-        # construction.
-        handler = DomArrayHandler(with_indices=False)
-        parser = _make_parser(handler, options, batch_text=True)
-
-        def one(value) -> str:
-            parser.parse(_to_str(value))
-            return inner_text(handler.nodes)
-
-        return html.map(one)
-
-    return _inner
-
-
-def clean_text_udf(**options):
-    @F.pandas_udf(StringType())
-    def _clean(html: pd.Series) -> pd.Series:
-        handler = DomArrayHandler(with_indices=False)
-        parser = _make_parser(handler, options, batch_text=True)
-
-        def one(value) -> str:
-            parser.parse(_to_str(value))
-            return clean_text(handler.nodes)
-
-        return html.map(one)
-
-    return _clean
-
-
-def main_content_udf(**options):
-    """Readability-lite main-content selection (north rule's "HTML
-    boilerplate strip ... DOM heuristics"): parse, score block
-    candidates by link-penalized subtree text mass, return the winning
-    block's normalized text (engine/readability.py). Same batch shape
-    as clean_text_udf: one reused parser per Arrow batch."""
-
-    @F.pandas_udf(StringType())
-    def _main(html: pd.Series) -> pd.Series:
-        from ..engine.readability import main_content_text
-
-        handler = DomArrayHandler(with_indices=False)
-        parser = _make_parser(handler, options, batch_text=True)
-
-        def one(value) -> str:
-            parser.parse(_to_str(value))
-            return main_content_text(handler.nodes)
-
-        return html.map(one)
-
-    return _main
-
-
-NODE_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("node_id", IntegerType()),
-            StructField("parent_id", IntegerType()),
-            StructField("idx_in_parent", IntegerType()),
-            StructField("type", StringType()),
-            StructField("name", StringType()),
-            StructField("attrs", MapType(StringType(), StringType())),
-            StructField("attr_quotes", MapType(StringType(), StringType())),
-            StructField("data", StringType()),
-            StructField("start_index", IntegerType()),
-            StructField("end_index", IntegerType()),
-        ]
-    )
-)
-
-
-NODE_ANC_SCHEMA = ArrayType(
-    StructType(
-        list(NODE_SCHEMA.elementType.fields)
-        + [StructField("ancestors", ArrayType(IntegerType()))]
-    )
-)
-
-
-def dom_nodes_udf(with_ancestors: bool = False, **options):
-    """``with_ancestors=True`` adds an ``ancestors array<int>`` field
-    (open-element node ids, root-first) — the descendant axis for
-    relational DOM queries (operators/domquery.py elements_inside)."""
-    schema = NODE_ANC_SCHEMA if with_ancestors else NODE_SCHEMA
-
-    @F.pandas_udf(schema)
-    def _nodes(html: pd.Series) -> pd.Series:
-        # Batch-level reuse is safe for the returned node lists:
-        # on_parser_init binds a *fresh* list per document, so a
-        # previously returned list is never mutated by the next parse.
-        handler = DomArrayHandler(with_ancestors=with_ancestors)
-        parser = _make_parser(handler, options)
-
-        def one(value):
-            parser.parse(_to_str(value))
-            return handler.nodes
-
-        return html.map(one)
-
-    return _nodes
-
-
-NODE_COUNT_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("name", StringType()),
-            StructField("cnt", IntegerType()),
-        ]
-    )
-)
-
-
-def node_counts_udf(**options):
-    """(name, cnt) histogram of DOM node names per document.
-
-    Same node universe as :func:`dom_nodes_udf` (see
-    :class:`_NodeCountHandler`) at a fraction of the transfer/explode
-    cost: output size is bounded by distinct names per doc, not node
-    count, so the downstream ``explode -> groupBy -> sum`` shuffles
-    kilobytes per partition at any corpus scale.
-    """
-
-    @F.pandas_udf(NODE_COUNT_SCHEMA)
-    def _counts(html: pd.Series) -> pd.Series:
-        handler = _NodeCountHandler()
-        parser = _make_parser(handler, options, batch_text=True)
-
-        def one(value):
-            parser.parse(_to_str(value))
-            return [
-                {"name": k, "cnt": v} for k, v in handler.counts.items()
-            ]
-
-        return html.map(one)
-
-    return _counts
-
-
-EVENT_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("seq", IntegerType()),
-            StructField("event", StringType()),
-            StructField("name", StringType()),
-            StructField("data", StringType()),
-            StructField("attrs", MapType(StringType(), StringType())),
-            StructField("is_implied", BooleanType()),
-            StructField("start_index", IntegerType()),
-            StructField("end_index", IntegerType()),
-        ]
-    )
-)
-
-
 class _EventArrayHandler:
     """Parser events as flat records (testHelper-equivalent shape)."""
-
-    def __init__(self) -> None:
-        self.events: list[dict] = []
-        self.parser: Parser | None = None
 
     def on_parser_init(self, parser) -> None:
         self.parser = parser
@@ -417,19 +232,241 @@ class _EventArrayHandler:
         self._push("processinginstruction", name=name, data=data)
 
 
+# ------------------------------------------------------------------
+# Renderers. batch_text=True opts in to the tokenizer's pre-decoded
+# text-run batching (engine/parser.py __init__): only for handlers that
+# consume neither per-event granularity nor per-entity positions —
+# text/DOM-content extraction, feeds, node-name histograms. The
+# event-exact renderers (events, stats, dom_nodes with indices) MUST
+# keep the exact stream.
+
+
+def _renderer(new_handler, render, *, batch_text: bool = True):
+    """Registry entry: ``(options, **params) -> (doc -> value)`` with one
+    ``new_handler(**params)`` and Parser per call, ``render(handler)``
+    after each parse. The Parser fires ``on_parser_init`` at construction
+    and on every parse, which is where these handlers bind their state."""
+
+    def make(options: dict, **params):
+        handler = new_handler(**params)
+        parser = Parser(handler, ParserOptions(**options), batch_text=batch_text)
+
+        def one(doc: str):
+            parser.parse(doc)
+            return render(handler)
+
+        return one
+
+    return make
+
+
+def _dom(render):
+    """Renderer for ``render(nodes)`` over a position-free DOM parse."""
+    return _renderer(
+        partial(DomArrayHandler, with_indices=False), lambda h: render(h.nodes)
+    )
+
+
+# The text-family renderers render ``(text, n_tags)``: the open-element
+# count is parse_pages' lineage column (its modes are exactly these
+# names); their string UDFs keep the text only.
+TEXT_RENDERERS = ("text", "main", "markdown")
+TEXT_COLUMNS = ("text", "n_tags")
+_full_text = _renderer(TextHandler, lambda h: ("".join(h.parts), h.n_tags))
+
+
+def _text(options: dict):
+    # Default HTML options: tokenizer-only fast path (~2x), bails to
+    # the full parser on foreign content.
+    return _full_text(options) if options else FastTextExtractor().extract
+
+
+def _tagged(render):
+    def tagged(nodes: list[dict]) -> tuple[str, int]:
+        n_tags = sum(1 for n in nodes if n["type"] in ("tag", "script", "style"))
+        return render(nodes), n_tags
+
+    return tagged
+
+
+_ITEM_FIELDS = ("id", "title", "link", "description", "pubDate")
+
+
+def _feed_row(nodes: list[dict]) -> tuple:
+    feed = get_feed(nodes)
+    if feed is None:
+        return (None,) * len(FEED_SCHEMA.fields)
+    items = [
+        {**dict.fromkeys(_ITEM_FIELDS), **it, "media": it.get("media") or []}
+        for it in feed.get("items", [])
+    ]
+    return (*(feed.get(f) for f in FEED_SCHEMA.fieldNames()[:-1]), items)
+
+
+def _sitemap_row(nodes: list[dict]) -> tuple:
+    sm = get_sitemap(nodes)
+    return (None, None) if sm is None else (sm["kind"], sm["entries"])
+
+
+def _outer_html(options: dict):
+    return _dom(partial(serialize, xml_mode=options.get("xml_mode", False)))(options)
+
+
+def _inner_html(options: dict, tag: str = "body"):
+    xml_mode = options.get("xml_mode", False)
+
+    def render(nodes: list[dict]) -> str | None:
+        target = next((n for n in nodes if n["name"] == tag), None)
+        return target and inner_html_of(nodes, target["node_id"], xml_mode=xml_mode)
+
+    return _dom(render)(options)
+
+
+RENDERERS = {
+    "text": _text,
+    "inner_text": _dom(inner_text),
+    "clean_text": _dom(clean_text),
+    "main": _dom(_tagged(main_content_text)),
+    "markdown": _dom(_tagged(to_markdown)),
+    # on_parser_init binds a *fresh* node/event list per document, so a
+    # list returned for one row is never mutated by the next parse.
+    "dom_nodes": _renderer(DomArrayHandler, attrgetter("nodes"), batch_text=False),
+    "node_counts": _renderer(
+        _NodeCountHandler,
+        lambda h: [{"name": k, "cnt": v} for k, v in h.counts.items()],
+    ),
+    "events": _renderer(_EventArrayHandler, attrgetter("events"), batch_text=False),
+    "feed": _dom(_feed_row),
+    "sitemap": _dom(_sitemap_row),
+    "stats": _renderer(
+        _CountingHandler,
+        attrgetter("n_events", "n_tags", "n_text_chars", "max_depth"),
+        batch_text=False,
+    ),
+    "outer_html": _outer_html,
+    "inner_html": _inner_html,
+}
+
+
+def _parse_udf(name: str, schema, options: dict, **params):
+    """pandas UDF: renderer ``name`` built once per Arrow batch and
+    mapped over it by ``_map_docs``. Struct schemas come back as a
+    DataFrame (Spark checks the value, not the hint); text-family
+    renderers drop their tag count."""
+    make = RENDERERS[name]
+    text_only = name in TEXT_RENDERERS
+    columns = schema.fieldNames() if isinstance(schema, StructType) else None
+
+    @F.pandas_udf(schema)
+    def _batch(values: pd.Series) -> pd.Series:
+        if text_only:
+            return _map_docs(values, make(options), columns=TEXT_COLUMNS)["text"]
+        return _map_docs(values, make(options, **params), columns=columns)
+
+    return _batch
+
+
+def extract_text_udf(**options):
+    return _parse_udf("text", StringType(), options)
+
+
+def inner_text_udf(**options):
+    return _parse_udf("inner_text", StringType(), options)
+
+
+def clean_text_udf(**options):
+    return _parse_udf("clean_text", StringType(), options)
+
+
+def main_content_udf(**options):
+    """Readability-lite main-content selection (north rule's "HTML
+    boilerplate strip ... DOM heuristics"): parse, score block
+    candidates by link-penalized subtree text mass, return the winning
+    block's normalized text (engine/readability.py)."""
+    return _parse_udf("main", StringType(), options)
+
+
+def markdown_udf(**options):
+    """HTML -> Markdown (engine/markdown.py): the structured-text
+    shaping step of a training pipeline — headings/lists/links/tables
+    kept, boilerplate head/script/style dropped."""
+    return _parse_udf("markdown", StringType(), options)
+
+
+NODE_SCHEMA = ArrayType(
+    StructType(
+        [
+            StructField("node_id", IntegerType()),
+            StructField("parent_id", IntegerType()),
+            StructField("idx_in_parent", IntegerType()),
+            StructField("type", StringType()),
+            StructField("name", StringType()),
+            StructField("attrs", MapType(StringType(), StringType())),
+            StructField("attr_quotes", MapType(StringType(), StringType())),
+            StructField("data", StringType()),
+            StructField("start_index", IntegerType()),
+            StructField("end_index", IntegerType()),
+        ]
+    )
+)
+
+
+NODE_ANC_SCHEMA = ArrayType(
+    StructType(
+        list(NODE_SCHEMA.elementType.fields)
+        + [StructField("ancestors", ArrayType(IntegerType()))]
+    )
+)
+
+
+def dom_nodes_udf(with_ancestors: bool = False, **options):
+    """``with_ancestors=True`` adds an ``ancestors array<int>`` field
+    (open-element node ids, root-first) — the descendant axis for
+    relational DOM queries (operators/domquery.py elements_inside)."""
+    schema = NODE_ANC_SCHEMA if with_ancestors else NODE_SCHEMA
+    return _parse_udf("dom_nodes", schema, options, with_ancestors=with_ancestors)
+
+
+NODE_COUNT_SCHEMA = ArrayType(
+    StructType(
+        [
+            StructField("name", StringType()),
+            StructField("cnt", IntegerType()),
+        ]
+    )
+)
+
+
+def node_counts_udf(**options):
+    """(name, cnt) histogram of DOM node names per document.
+
+    Same node universe as :func:`dom_nodes_udf` (see
+    :class:`_NodeCountHandler`) at a fraction of the transfer/explode
+    cost: output size is bounded by distinct names per doc, not node
+    count, so the downstream ``explode -> groupBy -> sum`` shuffles
+    kilobytes per partition at any corpus scale.
+    """
+    return _parse_udf("node_counts", NODE_COUNT_SCHEMA, options)
+
+
+EVENT_SCHEMA = ArrayType(
+    StructType(
+        [
+            StructField("seq", IntegerType()),
+            StructField("event", StringType()),
+            StructField("name", StringType()),
+            StructField("data", StringType()),
+            StructField("attrs", MapType(StringType(), StringType())),
+            StructField("is_implied", BooleanType()),
+            StructField("start_index", IntegerType()),
+            StructField("end_index", IntegerType()),
+        ]
+    )
+)
+
+
 def parser_events_udf(**options):
-    @F.pandas_udf(EVENT_SCHEMA)
-    def _events(html: pd.Series) -> pd.Series:
-        handler = _EventArrayHandler()
-        parser = _make_parser(handler, options)
-
-        def one(value):
-            parser.parse(_to_str(value))
-            return handler.events
-
-        return html.map(one)
-
-    return _events
+    return _parse_udf("events", EVENT_SCHEMA, options)
 
 
 _MEDIA_SCHEMA = StructType(
@@ -480,43 +517,9 @@ FEED_SCHEMA = StructType(
 
 
 def feed_udf():
-    @F.pandas_udf(FEED_SCHEMA)
-    def _feed(xml: pd.Series) -> pd.DataFrame:
-        handler = DomArrayHandler(with_indices=False)
-        parser = _make_parser(handler, {"xml_mode": True}, batch_text=True)
-        rows = []
-        for value in xml:
-            parser.parse(_to_str(value))
-            feed = get_feed(handler.nodes)
-            if feed is None:
-                rows.append({f.name: None for f in FEED_SCHEMA.fields})
-                continue
-            items = [
-                {
-                    "id": it.get("id"),
-                    "title": it.get("title"),
-                    "link": it.get("link"),
-                    "description": it.get("description"),
-                    "pubDate": it.get("pubDate"),
-                    "media": it.get("media") or [],
-                }
-                for it in feed.get("items", [])
-            ]
-            rows.append(
-                {
-                    "type": feed.get("type"),
-                    "id": feed.get("id"),
-                    "title": feed.get("title"),
-                    "link": feed.get("link"),
-                    "description": feed.get("description"),
-                    "updated": feed.get("updated"),
-                    "author": feed.get("author"),
-                    "items": items,
-                }
-            )
-        return pd.DataFrame(rows)
-
-    return _feed
+    """parseFeed (engine xmlMode): a non-feed document yields a non-NULL
+    struct whose fields are all NULL."""
+    return _parse_udf("feed", FEED_SCHEMA, {"xml_mode": True})
 
 
 SITEMAP_SCHEMA = StructType(
@@ -539,26 +542,11 @@ SITEMAP_SCHEMA = StructType(
 )
 
 
-def markdown_udf(**options):
-    """HTML -> Markdown (engine/markdown.py): the structured-text
-    shaping step of a training pipeline — headings/lists/links/tables
-    kept, boilerplate head/script/style dropped. Same batch shape as
-    extract_text_udf: one reused parser per Arrow batch."""
-
-    @F.pandas_udf(StringType())
-    def _md(html: pd.Series) -> pd.Series:
-        from ..engine.markdown import to_markdown
-
-        handler = DomArrayHandler(with_indices=False)
-        parser = _make_parser(handler, options, batch_text=True)
-
-        def one(value) -> str:
-            parser.parse(_to_str(value))
-            return to_markdown(handler.nodes)
-
-        return html.map(one)
-
-    return _md
+def sitemap_udf():
+    """Sitemap/sitemap-index parse (engine xmlMode, same row shape as
+    ``feed_udf``): a non-sitemap document yields a non-NULL struct with
+    ``kind`` and ``entries`` both NULL."""
+    return _parse_udf("sitemap", SITEMAP_SCHEMA, {"xml_mode": True})
 
 
 def sniff_decode_udf(default: str = "utf-8"):
@@ -577,35 +565,12 @@ def sniff_decode_udf(default: str = "utf-8"):
 
     @F.pandas_udf(schema)
     def _sniff(data: pd.Series) -> pd.DataFrame:
-        from ..engine.encoding import decode_html
-
         rows = [
             decode_html(v if v is not None else b"", default) for v in data
         ]
         return pd.DataFrame(rows, columns=["charset", "decoded"])
 
     return _sniff
-
-
-def sitemap_udf():
-    """Sitemap/sitemap-index parse (engine xmlMode, same batch shape
-    as ``feed_udf``): NULL struct for non-sitemap documents."""
-
-    @F.pandas_udf(SITEMAP_SCHEMA)
-    def _sitemap(xml: pd.Series) -> pd.DataFrame:
-        handler = DomArrayHandler(with_indices=False)
-        parser = _make_parser(handler, {"xml_mode": True}, batch_text=True)
-        rows = []
-        for value in xml:
-            parser.parse(_to_str(value))
-            sm = get_sitemap(handler.nodes)
-            if sm is None:
-                rows.append({"kind": None, "entries": None})
-            else:
-                rows.append(sm)
-        return pd.DataFrame(rows)
-
-    return _sitemap
 
 
 STATS_SCHEMA = StructType(
@@ -619,21 +584,4 @@ STATS_SCHEMA = StructType(
 
 
 def doc_stats_udf(**options):
-    @F.pandas_udf(STATS_SCHEMA)
-    def _stats(html: pd.Series) -> pd.DataFrame:
-        handler = _CountingHandler()
-        parser = _make_parser(handler, options)
-        rows = []
-        for value in html:
-            parser.parse(_to_str(value))
-            rows.append(
-                {
-                    "n_events": handler.n_events,
-                    "n_tags": handler.n_tags,
-                    "n_text_chars": handler.n_text_chars,
-                    "max_depth": handler.max_depth,
-                }
-            )
-        return pd.DataFrame(rows)
-
-    return _stats
+    return _parse_udf("stats", STATS_SCHEMA, options)

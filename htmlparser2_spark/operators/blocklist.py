@@ -39,7 +39,13 @@ def domain_suffixes(host: Column) -> Column:
     Empty labels are dropped before the chain is built: a trailing-dot
     FQDN (``bad.example.`` — same host to DNS and browsers) must
     produce the same suffixes as ``bad.example``, not a dot-suffixed
-    chain that walks past every blocklist entry."""
+    chain that walks past every blocklist entry.
+
+    Every entry keeps at most 127 labels (the DNS label-count ceiling).
+    A host with more than 127 labels is no valid hostname; its first
+    ``n - 127`` entries are truncated to their leading 127 labels, so
+    they are not suffixes and match no blocklist entry, while every
+    suffix of up to 127 labels is exact."""
     # Label array bound as a lambda variable — interpreted HOF lambdas
     # re-evaluate unbound outer expressions per element (here: the
     # host re-split per suffix; hosts are short, but the page-admission

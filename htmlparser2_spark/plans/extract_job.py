@@ -20,7 +20,7 @@ Scale design notes
   granularity — the batch analogue of the reference's incremental
   ``write()`` chunks (Parser.ts:774-800).
 * Lineage: every output row carries its partition id; per-partition
-  metrics (docs, bytes, events, wall_ms) aggregate from the same pass.
+  metrics (docs, bytes, tags, wall_ms) aggregate from the same pass.
 """
 
 from __future__ import annotations
@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.udfs import RENDERERS, TEXT_COLUMNS, TEXT_RENDERERS, _map_docs
+
 __all__ = ["parse_pages", "run_extract", "partition_metrics"]
 
 PARSED_SCHEMA = StructType(
@@ -50,7 +52,6 @@ PARSED_SCHEMA = StructType(
         StructField("extracted", StringType()),
         StructField("golden_match", IntegerType()),
         StructField("n_tags", IntegerType()),
-        StructField("n_events", IntegerType()),
         StructField("html_bytes", LongType()),
         StructField("pid", IntegerType()),
         StructField("wall_ms", LongType()),
@@ -58,114 +59,40 @@ PARSED_SCHEMA = StructType(
 )
 
 
-def _make_extract(mode: str):
-    """Per-worker extractor: doc string -> (extracted_text, n_tags).
-
-    ``text`` is the hot path (tokenizer-only FastTextExtractor, full
-    textContent); ``main`` parses to a DOM and runs the readability-lite
-    main-content selection (north rule's boilerplate strip);
-    ``markdown`` parses to a DOM and renders structure-keeping Markdown
-    (engine/markdown.py) — one reused handler+parser per worker, reset
-    per document."""
-    if mode in ("main", "markdown"):
-        from ..engine.dom import DomArrayHandler
-        from ..engine.parser import Parser
-
-        if mode == "main":
-            from ..engine.readability import main_content_text as render
-        else:
-            from ..engine.markdown import to_markdown as render
-
-        handler = DomArrayHandler(with_indices=False)
-        parser = Parser(handler)
-        element_types = ("tag", "script", "style")
-
-        def extract(doc: str) -> tuple[str, int]:
-            parser.parse(doc)
-            nodes = handler.nodes
-            n_tags = sum(1 for n in nodes if n["type"] in element_types)
-            return render(nodes), n_tags
-
-        return extract
-    if mode != "text":
-        raise ValueError(f"unknown extract mode: {mode!r}")
-    from ..engine.fast_text import FastTextExtractor
-
-    return FastTextExtractor().extract
-
-
 def _parse_batches_fn(mode: str, sniff_charset: bool = False):
+    """mapInPandas worker for ``mode``: the same text-family renderer as
+    extract_text_udf()/main_content_udf()/markdown_udf(), built once per
+    partition and run over each batch by the shared ``_map_docs`` loop."""
+    if mode not in TEXT_RENDERERS:
+        raise ValueError(f"unknown extract mode: {mode!r}")
+
     def _parse_batches(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
-        """mapInPandas worker: parse every document in every Arrow batch."""
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
         t0 = time.perf_counter()
-
-        extract = _make_extract(mode)
-        if sniff_charset:
-            from ..engine.encoding import decode_html
-
-            def to_doc(html):
-                return "" if html is None else decode_html(html)[1]
-
-        else:
-
-            def to_doc(html):
-                return (
-                    html.decode("utf-8", "replace")
-                    if html is not None
-                    else ""
-                )
-
+        render = RENDERERS[mode]({})
         for batch in batches:
-            # Series.__iter__ is slow; pull plain python lists once per
-            # batch.
-            htmls = batch["html"].tolist()
+            html = batch["html"]
+            out = _map_docs(
+                html, render, sniff_charset=sniff_charset, columns=TEXT_COLUMNS
+            )
             # Real crawls carry no expected-extraction column;
             # golden_match is then reported as 0 matches over 0 checks
             # (sum stays usable). In mode="main"/"markdown" the golden
             # column is the FULL-extraction text, so matches stay 0 by
             # design.
-            goldens = (
-                batch["text"].tolist()
-                if "text" in batch.columns
-                else [None] * len(htmls)
-            )
-            extracted_col = []
-            match_col = []
-            tags_col = []
-            events_col = []
-            bytes_col = []
-            for html, golden in zip(htmls, goldens):
-                # NULL payloads (fetch failures in real crawls) parse as
-                # empty documents instead of failing the task. With
-                # sniff_charset, bytes go through the BOM + meta
-                # prescan decoder (engine/encoding.py) instead of
-                # assumed-UTF-8.
-                doc = to_doc(html)
-                extracted, n_tags = extract(doc)
-                extracted_col.append(extracted)
-                match_col.append(
-                    1 if golden is not None and extracted == golden else 0
-                )
-                tags_col.append(n_tags)
-                # Lineage-only approximation: opens+closes pair up, so
-                # event volume ~ 2 x tags (exact counting lives in
-                # doc_stats_udf).
-                events_col.append(2 * n_tags)
-                bytes_col.append(len(html) if html is not None else 0)
+            golden = batch["text"] if "text" in batch.columns else None
             yield pd.DataFrame(
                 {
                     "url": batch["url"],
                     "lang": batch["lang"],
-                    "extracted": extracted_col,
-                    "golden_match": match_col,
-                    "n_tags": tags_col,
-                    "n_events": events_col,
-                    "html_bytes": bytes_col,
+                    "extracted": out["text"],
+                    "golden_match": (out["text"] == golden).astype("int32"),
+                    "n_tags": out["n_tags"],
+                    "html_bytes": [0 if h is None else len(h) for h in html.tolist()],
                     "pid": pid,
                     "wall_ms": int((time.perf_counter() - t0) * 1000),
                 }
@@ -216,12 +143,14 @@ def parse_pages(
             mode=mode,
             sniff_charset=sniff_charset,
         )
-        jumbo = pages.filter(is_jumbo).repartition(n, F.xxhash64("url"))
-        return normal.unionByName(
-            jumbo.mapInPandas(
-                _parse_batches_fn(mode, sniff_charset), PARSED_SCHEMA
-            )
+        jumbo = parse_pages(
+            pages.filter(is_jumbo),
+            n_partitions=n,
+            repartition=True,
+            mode=mode,
+            sniff_charset=sniff_charset,
         )
+        return normal.unionByName(jumbo)
     if repartition is None:
         # Estimate scan parallelism without touching df.rdd (which
         # converts the whole logical plan to an RDD on every call just
@@ -243,11 +172,11 @@ def parse_pages(
 
 
 def partition_metrics(parsed: DataFrame) -> DataFrame:
-    """Per-partition lineage: docs, bytes, events, wall_ms."""
+    """Per-partition lineage: docs, bytes, tags, wall_ms."""
     return parsed.groupBy("pid").agg(
         F.count(F.lit(1)).alias("docs"),
         F.sum("html_bytes").alias("bytes"),
-        F.sum("n_events").alias("events"),
+        F.sum("n_tags").alias("tags"),
         F.max("wall_ms").alias("wall_ms"),
         F.sum("golden_match").alias("golden_matches"),
     )

@@ -6,7 +6,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark"]
+__all__ = ["get_spark", "local_cpus"]
+
+
+def local_cpus() -> int:
+    """Worker threads for ``local[N]``: ``$SPARK_GRAFT_CPUS`` when set,
+    else the host's CPU count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def get_spark(
@@ -19,13 +25,13 @@ def get_spark(
     """``conf`` entries are applied last and override the defaults —
     creation-time only (getOrCreate ignores configs when a session
     already exists, as ever)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     builder = (
         SparkSession.builder.appName(app)
         .master(master or f"local[{cpus}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or int(cpus)),
+            str(shuffle_partitions or cpus),
         )
         # Arrow batching is the JVM<->Python boundary for every UDF; bound
         # batch memory so one batch of large documents can't balloon.

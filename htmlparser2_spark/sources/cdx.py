@@ -89,7 +89,8 @@ def cdx_index(
     digest = (
         F.sha2(digest_src, 256)
         if digest_format == "sha256-hex"
-        else _sha1_b32_udf()(digest_src)
+        # sha2 hashes a string column's UTF-8 bytes; cast so SHA-1 does too.
+        else _sha1_b32_udf()(digest_src.cast("binary"))
     )
     base = records.select(
         surt_key(url).alias("urlkey"),

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.extract_job import PARSED_SCHEMA, _parse_batches_fn
+from ..plans.extract_job import parse_pages
 
 __all__ = ["stream_extract", "run_stream_once"]
 
@@ -36,7 +36,7 @@ def stream_extract(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     pages = reader.parquet(source_dir)
-    return pages.mapInPandas(_parse_batches_fn("text"), PARSED_SCHEMA)
+    return parse_pages(pages, repartition=False)
 
 
 def run_stream_once(

@@ -14,7 +14,7 @@ from htmlparser2_spark.engine.fast_text import FastTextExtractor, fast_text_cont
 from htmlparser2_spark.engine.parser import Parser
 
 GOLD = pathlib.Path(__file__).parent / "goldens"
-DOCS = pathlib.Path("/root/reference/src/__fixtures__/Documents")
+DOCS = pathlib.Path(__file__).parent / "fixtures" / "Documents"
 
 
 def full_text(doc: str) -> str:
@@ -29,19 +29,26 @@ def full_text(doc: str) -> str:
     return "".join(parts)
 
 
-def _default_html_cases():
-    cases = []
-    for name in ("parser_events.json", "tokenizer.json"):
-        for case in json.loads((GOLD / name).read_text()):
-            if not case["options"]:  # default HTML options only
-                cases.append(case["input"])
-    for f in ("Basic.html", "Attributes.html", "Svg.html"):
-        cases.append((DOCS / f).read_text())
-    return cases
+def _default_html_inputs() -> list[str]:
+    return [
+        case["input"]
+        for name in ("parser_events.json", "tokenizer.json")
+        for case in json.loads((GOLD / name).read_text())
+        if not case["options"]  # default HTML options only
+    ]
 
 
-@pytest.mark.parametrize("doc", _default_html_cases(), ids=range(len(_default_html_cases())))
+_GOLDEN_INPUTS = _default_html_inputs()
+
+
+@pytest.mark.parametrize("doc", _GOLDEN_INPUTS, ids=range(len(_GOLDEN_INPUTS)))
 def test_fast_matches_full_on_goldens(doc):
+    assert fast_text_content(doc) == full_text(doc)
+
+
+@pytest.mark.parametrize("name", ["Basic.html", "Attributes.html", "Svg.html"])
+def test_fast_matches_full_on_fixture_documents(name):
+    doc = (DOCS / name).read_text(encoding="utf-8")
     assert fast_text_content(doc) == full_text(doc)
 
 

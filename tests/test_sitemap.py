@@ -59,8 +59,8 @@ def test_non_sitemap_documents():
 
 @pytest.mark.spark
 def test_sitemap_udf_null_and_roundtrip(spark):
-    """Non-sitemap documents yield a NULL struct; a urlset roundtrips
-    through the Arrow batch with typed lastmod/priority."""
+    """Non-sitemap documents yield a struct with NULL fields; a urlset
+    roundtrips through the Arrow batch with typed lastmod/priority."""
     from pyspark.sql import functions as F
 
     from htmlparser2_spark.functions.udfs import sitemap_udf

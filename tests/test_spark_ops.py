@@ -81,6 +81,44 @@ def test_parser_events_udf(spark):
     assert ("closetag", "li", True) in names  # implied close of first <li>
 
 
+def test_feed_and_sitemap_udf_non_matching_rows(spark):
+    """A document that is neither feed nor sitemap (and a NULL payload)
+    comes out of feed_udf and sitemap_udf as a non-NULL struct whose
+    fields are all NULL, also next to a matching row in the batch."""
+    from htmlparser2_spark.functions.udfs import feed_udf, sitemap_udf
+
+    df = spark.createDataFrame(
+        [
+            ("page", "<html><body><p>page</p></body></html>"),
+            ("null", None),
+            ("rss", "<rss version='2.0'><channel><title>T</title>"
+                    "<item><title>i</title></item></channel></rss>"),
+            ("sitemap", "<urlset><url><loc>https://h/a</loc></url></urlset>"),
+        ],
+        "id string, xml string",
+    ).coalesce(1)
+    rows = {
+        r["id"]: r
+        for r in df.select(
+            "id",
+            feed_udf()(F.col("xml")).alias("f"),
+            sitemap_udf()(F.col("xml")).alias("s"),
+        )
+        .select("*", F.col("f").isNull().alias("f_null"),
+                F.col("s").isNull().alias("s_null"))
+        .collect()
+    }
+    for key in ("page", "null"):
+        r = rows[key]
+        assert not r["f_null"] and not r["s_null"]
+        assert r["f"].asDict() == {k: None for k in r["f"].asDict()}
+        assert r["s"].asDict() == {"kind": None, "entries": None}
+    assert rows["rss"]["f"]["type"] == "rss"
+    assert rows["rss"]["s"].asDict() == {"kind": None, "entries": None}
+    assert rows["sitemap"]["s"]["kind"] == "urlset"
+    assert rows["sitemap"]["f"]["type"] is None
+
+
 def test_feed_udf(spark):
     from htmlparser2_spark.functions.udfs import feed_udf
 
@@ -482,7 +520,7 @@ def test_partition_metrics(spark):
     parsed = parse_pages(build_pages(spark, SF), n_partitions=8)
     metrics = partition_metrics(parsed).collect()
     assert sum(m["docs"] for m in metrics) == 500
-    assert all(m["wall_ms"] >= 0 and m["events"] > 0 for m in metrics)
+    assert all(m["wall_ms"] >= 0 and m["tags"] > 0 for m in metrics)
     assert sum(m["golden_matches"] for m in metrics) == 500
 
 
@@ -2525,6 +2563,39 @@ def test_cdx_index_offsets_and_digest(spark):
     assert {r["length"] for r in b32} == {r["length"] for r in out}
     with _pytest.raises(ValueError, match="digest_format"):
         cdx_index(df, digest_format="md5")
+
+
+def test_cdx_digest_of_string_payload(spark):
+    """A STRING payload column hashes as its UTF-8 bytes under both
+    digest formats (sha2 does so natively; sha1-b32 casts)."""
+    import base64
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from htmlparser2_spark.sources.cdx import DIGEST_FORMATS, cdx_index
+
+    payload = "café ✓ payload"
+    df = spark.createDataFrame(
+        [("https://h.example/a", "2024-01-01 00:00:00", payload, "REC")],
+        "url string, ts string, payload string, record string",
+    ).select(
+        "url", F.to_timestamp("ts").alias("warc_ts"), "payload",
+        F.encode("payload", "utf-8").alias("payload_bytes"),
+        F.encode("record", "utf-8").alias("record"),
+    )
+    digests = {}
+    for fmt in DIGEST_FORMATS:
+        for col in ("payload", "payload_bytes"):
+            digests[fmt, col] = cdx_index(
+                df, payload_col=col, n_files=1, digest_format=fmt
+            ).first()["digest"]
+        assert digests[fmt, "payload"] == digests[fmt, "payload_bytes"]
+    data = payload.encode("utf-8")
+    assert digests["sha256-hex", "payload"] == hashlib.sha256(data).hexdigest()
+    assert digests["sha1-b32", "payload"] == (
+        base64.b32encode(hashlib.sha1(data).digest()).decode("ascii")
+    )
 
 
 def test_script_profile_functions(spark):

@@ -32,7 +32,7 @@ import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
-from htmlparser2_spark.engine.fast_text import FastTextExtractor  # noqa: E402
+from htmlparser2_spark.engine.fast_text import FastTextExtractor, TextHandler  # noqa: E402
 from htmlparser2_spark.engine.parser import Parser  # noqa: E402
 
 WORDS = (
@@ -131,26 +131,15 @@ def measure(docs: list[str], one, repeats: int) -> dict:
     }
 
 
-class _TextHandler:
-    __slots__ = ("parts",)
-
-    def __init__(self) -> None:
-        self.parts: list[str] = []
-
-    def on_text(self, data: str) -> None:
-        self.parts.append(data)
-
-
 def main(n_docs: int = 20000, repeats: int = 3) -> None:
     fast = FastTextExtractor()
-    handler = _TextHandler()
-    # batch_text mirrors the production UDF construction
-    # (functions/udfs.py _make_parser): text/DOM-content extraction
-    # opts in to pre-decoded text-run batching.
+    handler = TextHandler()
+    # batch_text mirrors the production renderers (functions/udfs.py
+    # RENDERERS): text/DOM-content extraction opts in to pre-decoded
+    # text-run batching.
     parser = Parser(handler, batch_text=True)
 
     def full(d: str) -> str:
-        handler.parts.clear()
         parser.parse(d)
         return "".join(handler.parts)
 
