@@ -5,7 +5,8 @@ testHelper.ts:16-87): records ``{$event, data, startIndex, endIndex}``
 per handler callback, merges adjacent text events, drops the undefined
 quote argument from attribute events, and validates the
 ``startIndex <= endIndex`` invariant. Used by the ported golden-snapshot
-tests and by the event-stream UDF output.
+tests and ``tools/rebuild_fixtures.py``; the event-stream UDF renders
+with its own handler (``functions.udfs._EventArrayHandler``).
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Byte-pair-encoding subword tokenizer: distributed merge training
-and pure-Catalyst encoding.
+and map-only encoding.
 
 The tokenizer-TRAINING step of an LLM data pipeline (Sennrich,
 Haddow & Birch 2016, "Neural Machine Translation of Rare Words with
@@ -40,21 +40,21 @@ Scale shape (100 TB corpus)
   is never collected). This is how production tokenizers train at
   scale: frequencies are aggregated distributed, merges are learned
   on the aggregate. Cost O(n_merges × top_words × avg_word_len).
-- ``encode_bpe``: dual-engine, map-only either way (the same shape as
-  ``similarity.pq_encode`` and the minhash fold). Small merge tables
-  compile to LITERAL replace calls — a whole-stage-codegen Project
-  with zero Python — but the expression tree grows one nested
+- ``encode_bpe``: map-only, with the path chosen by table size (the
+  same shape as ``similarity.pq_encode``). Up to ``MAX_JVM_MERGES``
+  merges it compiles to LITERAL replace calls — a whole-stage-codegen
+  Project with zero Python — but the expression tree grows one nested
   ``replace`` per merge, and a production 30k–50k merge vocabulary
   blows past codegen's 64KB method limit into interpreted mode with
   the analyzer itself becoming the bottleneck (the same plan-size
-  cliff ``pq_encode`` documents for k=256 codebooks). Above
-  ``MAX_JVM_MERGES`` the encode switches to an Arrow-batched Python
-  kernel: per distinct word (memoized per worker), repeatedly merge
-  the lowest-rank pair present — provably the same result as the
-  sequential replace chain, because a merge's output symbol can only
-  appear in later-rank rules, so after rank r is exhausted no pair of
-  rank <= r can reappear (parity is test-pinned, including a seeded
-  randomized differential). Cost per distinct word is independent of
+  cliff ``pq_encode`` documents for k=256 codebooks). Past the bound
+  the encode takes an Arrow-batched Python kernel: per distinct word
+  (memoized per worker), repeatedly merge the lowest-rank pair
+  present — provably the same result as the sequential replace chain,
+  because a merge's output symbol can only appear in later-rank rules,
+  so after rank r is exhausted no pair of rank <= r can reappear
+  (parity is test-pinned, including a seeded randomized
+  differential). Cost per distinct word is independent of
   the merge-table depth — dict lookups, not 30k string scans.
 
 Cross-word safety needs no separator symbol: a learned pair's left
@@ -211,24 +211,20 @@ def segment_expr(
 
 
 def apply_merges(
-    seg: Column,
-    merges: list[tuple[int, str, str, int]],
-    *,
-    max_jvm_merges: int = MAX_JVM_MERGES,
+    seg: Column, merges: list[tuple[int, str, str, int]]
 ) -> Column:
     """Fold the learned merges over a segmentation column in rank
     order — n_merges literal ``replace`` expressions, map-only.
-    Refuses tables past ``max_jvm_merges`` (see the module constant:
+    Refuses tables past ``MAX_JVM_MERGES`` (see the module constant:
     the expression tree falls out of codegen and then out of tractable
-    analysis) — production-depth tables take ``encode_bpe``'s Arrow
-    engine instead."""
-    if len(merges) > max_jvm_merges:
+    analysis) — ``encode_bpe`` takes the Arrow kernel for those."""
+    if len(merges) > MAX_JVM_MERGES:
         raise ValueError(
             f"{len(merges)} merges exceed the literal-replace plan "
-            f"bound ({max_jvm_merges}): a replace chain this deep "
+            f"bound ({MAX_JVM_MERGES}): a replace chain this deep "
             "leaves whole-stage codegen (64KB method limit) and makes "
-            "the analyzer the bottleneck — use encode_bpe(..., "
-            "engine='arrow') (or raise max_jvm_merges knowingly)"
+            "the analyzer the bottleneck — encode_bpe encodes tables "
+            "this deep with its Arrow kernel"
         )
     col = seg
     for _rank, lhs, rhs, _cnt in merges:
@@ -303,11 +299,10 @@ def encode_text_py(
 
 
 def _encode_udf(merges: list[tuple[int, str, str, int]], pattern: str):
-    """Arrow-batched document encoder (the ``_minhash_fold_udf`` /
-    ``pq_encode`` dual-engine shape): the rank dict ships once per
-    worker in the closure; the word memo persists across batches
-    within a worker process (deterministic — it caches a pure
-    function)."""
+    """Arrow-batched document encoder (the ``pq_encode`` numpy-path
+    shape): the rank dict ships once per worker in the closure; the
+    word memo persists across batches within a worker process
+    (deterministic — it caches a pure function)."""
     ranks = {(lhs, rhs): rank for rank, lhs, rhs, _cnt in merges}
     cache: dict[str, str] = {}
 
@@ -331,38 +326,27 @@ def encode_bpe(
     text_col: str = "text",
     out_col: str = "bpe_seg",
     pattern: str = WORD_PATTERN,
-    engine: str = "auto",
-    max_jvm_merges: int = MAX_JVM_MERGES,
 ) -> DataFrame:
     """Add ``out_col`` (the encoded segmentation string — symbols are
     its brace groups) and ``n_bpe`` (subword token count = brace-group
     count). Applying merges in learned-rank order is the original
-    subword-nmt encoder; the whole thing is one map-only projection in
-    BOTH engines (plan-pinned: no shuffle either way).
+    subword-nmt encoder; the whole thing is one map-only projection on
+    either path (plan-pinned: no shuffle).
 
-    ``engine``: ``"jvm"`` (literal replace chain, zero Python — the
-    DuckDB oracle's exactness twin; refuses > ``max_jvm_merges``),
-    ``"arrow"`` (memoized per-word Python kernel, Arrow-batched —
-    depth-independent, the production path for 30k+ merge tables), or
-    ``"auto"`` (jvm up to the bound, arrow past it). Engines are
-    bit-identical by construction and parity-pinned in tests; the one
-    documented divergence risk is non-ASCII lowercasing (JVM
-    ``lower()`` vs Python ``str.lower()`` can differ on exotic locale
-    mappings), which the ASCII ``pattern`` makes invisible unless a
-    non-ASCII char lowercases INTO [a-z] — e.g. U+212A KELVIN SIGN,
-    which both map to 'k'."""
-    if engine == "auto":
-        engine = "jvm" if len(merges) <= max_jvm_merges else "arrow"
-    if engine == "jvm":
-        seg = apply_merges(
-            segment_expr(text_col, pattern),
-            merges,
-            max_jvm_merges=max_jvm_merges,
-        )
-    elif engine == "arrow":
-        seg = _encode_udf(merges, pattern)(F.col(text_col))
+    The path follows the table size: up to ``MAX_JVM_MERGES`` merges
+    the literal replace chain (:func:`apply_merges`, zero Python — the
+    DuckDB oracle's exactness twin), past it the memoized per-word
+    Arrow kernel (depth-independent, the path for 30k+ merge tables).
+    The two are bit-identical by construction and parity-pinned in
+    tests; the one documented divergence risk is non-ASCII lowercasing
+    (JVM ``lower()`` vs Python ``str.lower()`` can differ on exotic
+    locale mappings), which the ASCII ``pattern`` makes invisible
+    unless a non-ASCII char lowercases INTO [a-z] — e.g. U+212A KELVIN
+    SIGN, which both map to 'k'."""
+    if len(merges) <= MAX_JVM_MERGES:
+        seg = apply_merges(segment_expr(text_col, pattern), merges)
     else:
-        raise ValueError(f"unknown engine {engine!r} (auto|jvm|arrow)")
+        seg = _encode_udf(merges, pattern)(F.col(text_col))
     out = docs.withColumn(out_col, seg)
     n = F.length(out_col) - F.length(F.replace(F.col(out_col), F.lit("{")))
     return out.withColumn("n_bpe", n.cast("int"))

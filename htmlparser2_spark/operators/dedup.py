@@ -1,6 +1,7 @@
 """Deduplication operators for large-scale text corpora.
 
-All operators are pure DataFrame compositions (JVM-side, shuffle-aware):
+All operators are DataFrame compositions (JVM-side except the MinHash
+permutation fold, shuffle-aware):
 
 * :func:`exact_dedup`          — hash-groupBy exact duplicate groups
 * :func:`word_shingles`        — word n-gram shingling (built-in
@@ -22,10 +23,9 @@ reduction (min over permuted shingle hashes / sign of per-bit sums)
 never needs cross-row state — zero shuffles, a narrow projection over
 the scan (pinned by tests/test_plans.py). At 100 TB the signature
 stage streams through executors with no exchange; only the LSH band
-bucket-groupBy shuffles. MinHash's permutation+min fold is
-dual-engine (Arrow/numpy kernel by default, pure-Catalyst HOF
-fallback — bit-identical, see :func:`minhash_signatures`); SimHash
-stays a single JVM ``aggregate``/``zip_with`` expression.
+bucket-groupBy shuffles. MinHash's permutation+min fold is one
+Arrow-batched numpy kernel (see :func:`minhash_signatures`); SimHash
+is a single JVM ``aggregate``/``zip_with`` expression.
 
 Scale notes: every self-join keys on a hash (shingle hash, band hash,
 bucket), so skew is bounded by real duplicate clusters; MinHash bands
@@ -261,71 +261,34 @@ def minhash_signatures(
     seed: int = 42,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "arrow",
 ) -> DataFrame:
     """MinHash signatures: (id, sig array<long> of length n_perm).
 
     Base shingle hash is xxhash64 (JVM); permutations are universal
     hashes ``(a*h + b) mod M31`` folded with ``min`` per document.
 
-    **Map-only either way** (both engines are a narrow ``Project``
-    over the scan — zero shuffles; pinned by tests/test_plans.py), and
-    the two engines are bit-identical (parity-pinned by test):
-
-    * ``engine="arrow"`` (default): the shingle construction and base
-      xxhash64 stay JVM-side; the ``n_perm`` universal-hash + min fold
-      runs in ONE Arrow-batched numpy kernel
-      (``(flat_hashes * a + b) % M`` per permutation over the batch's
-      concatenated hash buffer, ``np.minimum.reduceat`` per document).
-      Measured 1.5-2x faster on the signature stage (5.37s vs 8.17s,
-      sf0.1 single-task) and ~11% on LSH end-to-end in the bench shape
-      (3.44s vs 3.86s warm best-of-3 — shingling and banding dominate
-      there): the interpreted ``zip_with`` allocates an ``n_perm``-long
-      boxed array per shingle, the numpy kernel does 3 vector ops per
-      permutation per batch.
-    * ``engine="jvm"``: pure Catalyst — one ``aggregate`` over the
-      in-row shingle array with a ``zip_with`` accumulator (no Python
-      workers at all; keep for environments where the Python worker
-      pool is the bottleneck). ``xxhash64`` runs once per shingle in
-      both engines (it is the aggregate's lambda variable / the
-      transfer column, never re-derived per permutation).
+    **Map-only**: a narrow ``Project`` over the scan — zero shuffles
+    (pinned by tests/test_plans.py). The shingle construction and base
+    xxhash64 stay JVM-side; the ``n_perm`` universal-hash + min fold
+    runs in ONE Arrow-batched numpy kernel (``(flat_hashes * a + b) %
+    M`` per permutation over the batch's concatenated hash buffer,
+    ``np.minimum.reduceat`` per document). It replaced a pure-Catalyst
+    ``aggregate``/``zip_with`` fold, which allocates an ``n_perm``-long
+    boxed array per shingle (warm signature stage on 5k sf0.1
+    documents in 4 cached partitions, ``local[4]`` on a 4-core host, 4
+    alternating reps: 0.67-0.84 s for the kernel, 0.92-1.12 s for that
+    fold).
 
     Duplicate shingles need no ``distinct`` (min is idempotent).
-    Shingle-less documents yield an all-null signature (the
-    ``_MERSENNE`` sentinel never occurs as a real ``mod M`` value).
+    Shingle-less documents yield an all-null signature.
     """
     base = _with_tokens(df, text_col, id_col)
     hashes = F.transform(
         _shingles_of(F.col("__toks"), n),
         lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)),
     )
-    if engine == "arrow":
-        sig_udf = _minhash_fold_udf(n_perm, seed)
-        return base.select("id", sig_udf(hashes).alias("sig"))
-    if engine != "jvm":
-        raise ValueError(f"unknown engine {engine!r} (arrow|jvm)")
-    params = _perm_params(n_perm, seed)
-    param_arr = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in params
-        ]
-    )
-    sig = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(_MERSENNE).cast("long"), n_perm),
-        lambda acc, h: F.zip_with(
-            acc,
-            param_arr,
-            lambda cur, p: F.least(
-                cur, F.pmod(h * p["a"] + p["b"], F.lit(_MERSENNE))
-            ),
-        ),
-        lambda acc: F.transform(
-            acc, lambda x: F.when(x < F.lit(_MERSENNE), x)
-        ),
-    )
-    return base.select("id", sig.alias("sig"))
+    sig_udf = _minhash_fold_udf(n_perm, seed)
+    return base.select("id", sig_udf(hashes).alias("sig"))
 
 
 def _minhash_fold_udf(n_perm: int, seed: int):
@@ -333,8 +296,7 @@ def _minhash_fold_udf(n_perm: int, seed: int):
 
     Input: one ``array<long>`` column of base shingle hashes, already
     reduced mod ``_MERSENNE`` (so every value is in ``[0, M)`` and
-    ``h * a + b < 2^62`` — no int64 overflow, same bound the JVM
-    expression relies on). Output is bit-identical to the JVM fold.
+    ``h * a + b < 2^62`` — no int64 overflow).
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -374,7 +336,6 @@ def minhash_lsh_pairs(
     seed: int = 42,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "arrow",
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing at least one identical band.
 
@@ -403,8 +364,7 @@ def minhash_lsh_pairs(
         )
     rows_per_band = n_perm // bands
     sig = minhash_signatures(
-        df, n=n, n_perm=n_perm, seed=seed, text_col=text_col,
-        id_col=id_col, engine=engine,
+        df, n=n, n_perm=n_perm, seed=seed, text_col=text_col, id_col=id_col
     )
     # Shingle-less documents have all-null signatures; without this
     # filter they'd share identical (hash-of-nulls) bands and form one

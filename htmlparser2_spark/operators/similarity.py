@@ -1,11 +1,12 @@
 """Similarity search over embedding columns (array<float>).
 
-* :func:`brute_force_topk` — exact cosine top-k: broadcast the (small)
-  query side across the corpus, JVM-side dot products via
-  ``zip_with``/``aggregate`` (no Python in the hot path), per-query top-k
-  with a window. At cluster scale the corpus stays partitioned; only the
-  query set is broadcast, so no shuffle of the big side occurs until the
-  final per-query top-k (bounded at ``|Q| * k`` rows by a partial top-k).
+* :func:`brute_force_topk` — exact cosine top-k with the (small) query
+  side broadcast across the corpus; the corpus stays partitioned, so no
+  shuffle of the big side occurs until the final per-query top-k. The
+  one operator here with two engines, because its callers need both:
+  ``engine="jvm"`` is the ``zip_with``/``aggregate`` fold a sequential
+  SQL oracle reproduces bit-for-bit, ``engine="arrow"`` the BLAS batch
+  scorer with a per-batch partial top-k (``|Q| * k`` rows per batch).
 * :func:`hyperplane_lsh_buckets` — random-hyperplane (SimHash) bucketing:
   the scale path. Sign patterns of ``n_bits`` fixed hyperplanes become a
   bucket key; candidate pairs only form within buckets, turning the
@@ -14,7 +15,11 @@
   with distributed Lloyd iterations (only the k x dim centroid matrix
   ever reaches the driver), corpus partitioned into cells, queries probe
   the ``n_probe`` nearest cells. Scan cost drops from |corpus| to
-  ~|corpus| * n_probe / n_centroids per query.
+  ~|corpus| * n_probe / n_centroids per query. IVF and LSH candidates
+  are scored with the Catalyst cosine fold (:func:`_cosine`).
+* :func:`pq_encode` / :func:`pq_topk` / :func:`ivfpq_topk` — product
+  quantization. The encode is literal JVM expressions up to a plan-size
+  bound (``_MAX_EXPR_CODEWORDS``) and a numpy kernel past it.
 """
 
 from __future__ import annotations
@@ -42,39 +47,6 @@ __all__ = [
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
-
-
-def _cosine_arrow():
-    """Row-wise Arrow cosine for candidate scoring: one einsum over
-    the batch instead of an interpreted ``zip_with``/``aggregate``
-    fold per row. Same zero-norm -> 0.0 convention as :func:`_cosine`.
-    Used by the ``engine="arrow"`` paths of the candidate-join
-    operators (ivf/lsh), where scored pairs arrive as two array
-    columns rather than a matrix-able corpus batch."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        A = np.array(list(a), dtype=np.float64)
-        B = np.array(list(b), dtype=np.float64)
-        dots = np.einsum("ij,ij->i", A, B)
-        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        return pd.Series(
-            np.divide(dots, den, out=np.zeros_like(dots), where=den != 0)
-        )
-
-    return cos
-
-
-def _pair_sim(engine: str):
-    """(qv, cv) -> sim column factory for the candidate-join scorers."""
-    if engine == "arrow":
-        udf = _cosine_arrow()
-        return lambda qv, cv: udf(qv, cv)
-    if engine != "jvm":
-        raise ValueError(f"unknown engine {engine!r} (jvm|arrow)")
-    return lambda qv, cv: _cosine(_as_double(qv), _as_double(cv))
 
 
 def _cosine(a, b):
@@ -144,12 +116,7 @@ def brute_force_topk(
     sims = c.join(F.broadcast(q)).select(
         "query_id", "neighbor_id", _cosine(F.col("qv"), F.col("cv")).alias("sim")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int"), F.round("sim", 4).alias("sim"))
-    )
+    return _sim_topk(sims, k)
 
 
 def _brute_force_topk_arrow(
@@ -224,19 +191,7 @@ def _brute_force_topk_arrow(
     partial = prepared.mapInPandas(
         partial_topk, "query_id long, neighbor_id long, sim double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int"),
-            F.round("sim", 4).alias("sim"),
-        )
-    )
+    return _sim_topk(partial, k)
 
 
 def _hyperplanes(dim: int, n_bits: int, seed: int) -> list[list[float]]:
@@ -410,7 +365,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
     metric: str = "cosine",
-    engine: str = "jvm",
 ) -> DataFrame:
     """Approximate cosine top-k via an IVF index.
 
@@ -421,9 +375,9 @@ def ivf_topk(
     corpus snapshot, reuse for every query stream). ``metric`` governs
     both the fit and cell assignment — centroids fit with one metric
     and assigned with another silently degrade recall, so the same
-    value threads through everywhere. ``engine="arrow"`` scores the
-    probed candidates with the batched einsum cosine instead of the
-    interpreted HOF fold (same decisions; see :func:`_cosine_arrow`).
+    value threads through everywhere. Candidates are scored with the
+    Catalyst :func:`_cosine` fold, which a sequential SQL oracle
+    reproduces bit-for-bit.
     """
     if centroids is None:
         centroids = ivf_fit_centroids(
@@ -454,19 +408,9 @@ def ivf_topk(
     sims = cb.join(F.broadcast(qb), "cell").select(
         "query_id",
         "neighbor_id",
-        _pair_sim(engine)(F.col("qv"), F.col("cv")).alias("sim"),
+        _cosine(_as_double(F.col("qv")), _as_double(F.col("cv"))).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int"),
-            F.round("sim", 4).alias("sim"),
-        )
-    )
+    return _sim_topk(sims, k)
 
 
 def lsh_topk(
@@ -479,14 +423,11 @@ def lsh_topk(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "jvm",
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH bucket.
 
     The bucket join replaces the full cross join; recall depends on
     ``n_bits`` (fewer bits -> bigger buckets -> higher recall/cost).
-    ``engine="arrow"`` scores candidates with the batched einsum
-    cosine (same decisions; see :func:`_cosine_arrow`).
     """
     qb = hyperplane_lsh_buckets(
         queries, dim=dim, n_bits=n_bits, seed=seed, id_col=id_col, vec_col=vec_col
@@ -497,14 +438,9 @@ def lsh_topk(
     sims = cb.join(F.broadcast(qb), "bucket").select(
         "query_id",
         "neighbor_id",
-        _pair_sim(engine)(F.col("qv"), F.col("cv")).alias("sim"),
+        _cosine(_as_double(F.col("qv")), _as_double(F.col("cv"))).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int"), F.round("sim", 4).alias("sim"))
-    )
+    return _sim_topk(sims, k)
 
 
 # ------------------------------------------------------------------
@@ -619,28 +555,32 @@ def _pq_codes_expr(vec_expr, codebooks: list[list[list[float]]]):
     return F.array(*codes)
 
 
+# Plan-size bound of the literal PQ encode: the expression tree grows
+# as m*k literal L2 terms, and a production k=256 codebook runs out of
+# memory while the plan is built. Past this many codewords pq_encode
+# takes the numpy kernel.
+_MAX_EXPR_CODEWORDS = 512
+
+
 def pq_encode(
     df: DataFrame,
     codebooks: list[list[list[float]]],
     *,
     vec_col: str = "embedding",
     code_col: str = "pq_code",
-    max_expr_codewords: int = 512,
 ) -> DataFrame:
     """Attach ``code_col`` (array<int>, length m): per subspace, the
     index of the nearest codeword by L2.
 
-    Two engines, chosen by codebook size: small codebooks compile to
-    pure JVM expressions (zero Python), but the expression tree grows
-    as m*k literal L2 terms and a production k=256 codebook OOMs the
-    driver at plan-build time — above ``max_expr_codewords`` total
-    codewords the encode switches to an Arrow-batched numpy argmin
-    (vectorized over the batch; codebooks ship once per worker in the
-    UDF closure). Ties resolve to the lowest code in both engines
-    (numpy argmin takes the first minimum). The original vector column
-    is untouched; storage-conscious callers drop it after encoding."""
+    Two paths, chosen by codebook size: up to ``_MAX_EXPR_CODEWORDS``
+    total codewords the encode compiles to pure JVM expressions (zero
+    Python); past it, to an Arrow-batched numpy argmin (vectorized over
+    the batch; codebooks ship once per worker in the UDF closure).
+    Ties resolve to the lowest code on both paths (numpy argmin takes
+    the first minimum). The original vector column is untouched;
+    storage-conscious callers drop it after encoding."""
     m, k, subdim = _pq_geometry(codebooks)
-    if m * k <= max_expr_codewords:
+    if m * k <= _MAX_EXPR_CODEWORDS:
         return df.withColumn(
             code_col, _pq_codes_expr(_as_double(F.col(vec_col)), codebooks)
         )
@@ -709,6 +649,26 @@ def _adc_dist(query_vec_col, codes_col, codebooks: list[list[list[float]]]):
         d = _l2(qsub, codeword)
         dist = d if dist is None else dist + d
     return dist
+
+
+def _sim_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Shared epilogue of the cosine-ranked top-k operators (brute
+    force, IVF, LSH): (query_id, neighbor_id, rank, sim), descending
+    sim, ties by neighbor id, sim rounded to 4 (ranking on the
+    unrounded value)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("sim"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.col("rank").cast("int"),
+            F.round("sim", 4).alias("sim"),
+        )
+    )
 
 
 def _dist_topk(scored: DataFrame, k: int) -> DataFrame:

@@ -256,32 +256,54 @@ def test_priority_encoder_matches_sequential_replace():
     assert encode_text_py(None, {}) == ""
 
 
-def test_apply_merges_refuses_past_jvm_bound():
-    from pyspark.sql import functions as F
-
-    from htmlparser2_spark.operators.bpe import apply_merges
-
-    merges = [(1, "a", "b", 0), (2, "ab", "c", 0), (3, "abc", EOW, 0)]
-    with pytest.raises(ValueError, match="literal-replace plan bound"):
-        apply_merges(F.lit("{a}{b}"), merges, max_jvm_merges=2)
+def _deep_merges(rng):
+    """(words, merges): a structurally-valid synthetic merge table past
+    MAX_JVM_MERGES — each word's prefix chain over 60 random 8-letter
+    words."""
+    words = sorted(
+        {
+            "".join(rng.choice("abcdefgh") for _ in range(8))
+            for _ in range(60)
+        }
+    )
+    merges = []
+    seen = set()
+    for w in words:
+        acc = w[0]
+        for ch in w[1:]:
+            pair = (acc, ch)
+            acc += ch
+            if pair in seen:
+                continue
+            seen.add(pair)
+            merges.append((len(merges) + 1, pair[0], pair[1], 1))
+    assert len(merges) > 260  # past MAX_JVM_MERGES
+    return words, merges
 
 
 @pytest.mark.spark
-def test_encode_jvm_engine_refuses_past_bound(spark):
-    docs = spark.createDataFrame([("ab",)], ["text"])
-    merges = [(1, "a", "b", 0), (2, "ab", EOW, 0)]
+def test_apply_merges_refuses_past_jvm_bound(spark):
+    import random
+
+    from pyspark.sql import functions as F
+
+    from htmlparser2_spark.operators.bpe import MAX_JVM_MERGES
+
+    _words, merges = _deep_merges(random.Random(7))
     with pytest.raises(ValueError, match="literal-replace plan bound"):
-        encode_bpe(docs, merges, engine="jvm", max_jvm_merges=1)
-    with pytest.raises(ValueError, match="unknown engine"):
-        encode_bpe(docs, merges, engine="numpy")
+        apply_merges(F.lit("{a}{b}"), merges)
+    apply_merges(F.lit("{a}{b}"), merges[:MAX_JVM_MERGES])  # at the bound
 
 
 @pytest.mark.spark
 def test_arrow_engine_matches_jvm(spark):
-    """Bit-identical engines on real corpus text + the one documented
-    non-ASCII edge (U+212A KELVIN SIGN lowercases into [a-z] in both
-    JVM lower() and Python str.lower())."""
+    """The literal replace chain and the Arrow kernel are bit-identical
+    on real corpus text + the one documented non-ASCII edge (U+212A
+    KELVIN SIGN lowercases into [a-z] in both JVM lower() and Python
+    str.lower())."""
     from pyspark.sql import functions as F
+
+    from htmlparser2_spark.operators.bpe import WORD_PATTERN, _encode_udf
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(60)
     docs = docs.select("doc_id", "text").union(
@@ -291,27 +313,34 @@ def test_arrow_engine_matches_jvm(spark):
         )
     )
     merges = train_bpe(word_frequencies(docs, top_words=60), 15)
-    jvm = encode_bpe(docs, merges, engine="jvm")
-    arrow = encode_bpe(docs, merges, engine="arrow")
-    j = {r["doc_id"]: (r["bpe_seg"], r["n_bpe"]) for r in jvm.collect()}
-    a = {r["doc_id"]: (r["bpe_seg"], r["n_bpe"]) for r in arrow.collect()}
-    assert j == a
+    rows = docs.select(
+        "doc_id",
+        apply_merges(segment_expr("text"), merges).alias("jvm"),
+        _encode_udf(merges, WORD_PATTERN)(F.col("text")).alias("arrow"),
+    ).collect()
+    assert len(rows) == 62
+    for r in rows:
+        assert r["jvm"] == r["arrow"], r["doc_id"]
 
 
 @pytest.mark.spark
 def test_encode_auto_switches_engine_and_stays_map_only(spark):
-    """auto = jvm at/below the bound, arrow above it; BOTH plans are
-    map-only (no Exchange, no Join — the merge table is closure/plan
-    state, never a joined side)."""
+    """encode_bpe takes the literal chain up to MAX_JVM_MERGES merges
+    and the Arrow kernel past it; BOTH plans are map-only (no Exchange,
+    no Join — the merge table is closure/plan state, never a joined
+    side)."""
+    import random
+
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     merges = train_bpe(
         word_frequencies(docs.limit(40), top_words=40), 6
     )
-    auto_small = _plan(encode_bpe(docs, merges, max_jvm_merges=6))
-    assert "Python" not in auto_small and "Exchange" not in auto_small
-    auto_big = _plan(encode_bpe(docs, merges, max_jvm_merges=5))
-    assert "ArrowEvalPython" in auto_big
-    assert "Exchange" not in auto_big and "Join" not in auto_big
+    small = _plan(encode_bpe(docs, merges))
+    assert "Python" not in small and "Exchange" not in small
+    _words, deep = _deep_merges(random.Random(7))
+    big = _plan(encode_bpe(docs, deep))
+    assert "ArrowEvalPython" in big
+    assert "Exchange" not in big and "Join" not in big
 
 
 @pytest.mark.spark
@@ -324,31 +353,12 @@ def test_arrow_engine_depth_independent(spark):
     import random
 
     rng = random.Random(7)
-    words = sorted(
-        {
-            "".join(rng.choice("abcdefgh") for _ in range(8))
-            for _ in range(60)
-        }
-    )
-    merges = []
-    rank = 0
-    seen = set()
-    for w in words:
-        acc = w[0]
-        for ch in w[1:]:
-            pair = (acc, ch)
-            acc += ch
-            if pair in seen:
-                continue
-            seen.add(pair)
-            rank += 1
-            merges.append((rank, pair[0], pair[1], 1))
-    assert len(merges) > 260  # past MAX_JVM_MERGES
+    words, merges = _deep_merges(rng)
     docs = spark.createDataFrame(
         [(i, " ".join(rng.choice(words) for _ in range(5))) for i in range(20)],
         ["doc_id", "text"],
     )
-    enc = encode_bpe(docs, merges)  # auto -> arrow
+    enc = encode_bpe(docs, merges)  # past the bound -> arrow
     ranks = {(l, r): k for k, l, r, _ in merges}
     for r in enc.collect():
         assert r["bpe_seg"] == encode_text_py(r["text"], ranks), r["doc_id"]

@@ -16,8 +16,8 @@ from htmlparser2_spark.engine.parser import Parser, ParserOptions
 GOLDENS = json.loads(
     (pathlib.Path(__file__).parent / "goldens" / "document_events.json").read_text()
 )
-# The HTML documents are rebuilt from these goldens by
-# tools/rebuild_fixtures.py (FIXTURES.md §4); the feed XMLs are absent.
+# All six documents are rebuilt from these goldens by
+# tools/rebuild_fixtures.py (FIXTURES.md §4).
 DOCS = pathlib.Path(__file__).parent / "fixtures" / "Documents"
 
 
@@ -33,7 +33,7 @@ def test_document_events(case):
 
 
 def test_vendored_html_fixtures_match_rebuild():
-    """The vendored HTML documents are byte-for-byte what
+    """All six vendored documents (html and xml) are byte-for-byte what
     tools/rebuild_fixtures.py derives from the goldens."""
     import runpy
 

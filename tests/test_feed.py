@@ -1,5 +1,9 @@
 """Feed extraction goldens, pinned to the reference snapshot values
-(/root/reference/src/__snapshots__/FeedHandler.spec.ts.snap:3-103)."""
+(htmlparser2 src/__snapshots__/FeedHandler.spec.ts.snap:3-103).
+
+The three feed documents are rebuilt from their golden event streams by
+tools/rebuild_fixtures.py (FIXTURES.md §4); these snapshot values are
+the check of them that does not go through our parser's event stream."""
 
 from __future__ import annotations
 
@@ -8,7 +12,7 @@ from datetime import datetime, timezone
 
 from htmlparser2_spark.engine.feed import parse_feed
 
-DOCS = pathlib.Path("/root/reference/src/__fixtures__/Documents")
+DOCS = pathlib.Path(__file__).parent / "fixtures" / "Documents"
 
 
 def ts(s: str) -> datetime:

@@ -68,10 +68,9 @@ def test_minhash_signatures_map_only(spark):
     from htmlparser2_spark.operators.dedup import minhash_signatures
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    for engine in ("jvm", "arrow"):
-        p = plan(minhash_signatures(docs, n_perm=8, engine=engine))
-        assert "Exchange" not in p
-        assert "Aggregate" not in p
+    p = plan(minhash_signatures(docs, n_perm=8))
+    assert "Exchange" not in p
+    assert "Aggregate" not in p
 
 
 def test_simhash_map_only(spark):
@@ -309,9 +308,8 @@ def test_tokenization_bound_once_per_row(spark):
     from htmlparser2_spark.operators.quality import gopher_filter
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    for engine in ("jvm", "arrow"):
-        p = _optimized(minhash_signatures(docs, n_perm=8, engine=engine))
-        assert p.count("split(") == 1, (engine, p)
+    p = _optimized(minhash_signatures(docs, n_perm=8))
+    assert p.count("split(") == 1, p
     p = _optimized(docs.select(_bigram_array(F.col("text")).alias("bg")))
     assert p.count("split(") == 1, p
     # gopher binds two token arrays (whitespace words + newline lines)

@@ -3,6 +3,8 @@ pipeline (lineage + checkpoint resume), streaming, multimodal, textstats."""
 
 from __future__ import annotations
 
+import pathlib
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -122,9 +124,10 @@ def test_feed_and_sitemap_udf_non_matching_rows(spark):
 def test_feed_udf(spark):
     from htmlparser2_spark.functions.udfs import feed_udf
 
-    xml = open(
-        "/root/reference/src/__fixtures__/Documents/Atom_Example.xml", "rb"
-    ).read()
+    xml = (
+        pathlib.Path(__file__).parent / "fixtures" / "Documents"
+        / "Atom_Example.xml"
+    ).read_bytes()
     df = spark.createDataFrame([(xml,)], "xml binary")
     row = df.select(feed_udf()(F.col("xml")).alias("f")).collect()[0]["f"]
     assert row["type"] == "atom"
@@ -170,24 +173,36 @@ def test_minhash_lsh_finds_exact_and_near_dups(spark, dup_docs):
 
 
 def test_minhash_engines_bit_identical(spark, dup_docs):
-    """The Arrow/numpy permutation+min fold must reproduce the pure-
-    Catalyst HOF fold exactly — including the all-null signature for
-    shingle-less documents."""
-    from htmlparser2_spark.operators.dedup import minhash_signatures
+    """The Arrow/numpy permutation+min fold must reproduce a plain-
+    Python ``min((a*h + b) % M)`` over the Spark-side base shingle
+    hashes exactly — and give shingle-less documents an all-null
+    signature."""
+    from collections import defaultdict
+
+    from htmlparser2_spark.operators.dedup import (
+        _MERSENNE,
+        _perm_params,
+        minhash_signatures,
+        word_shingles,
+    )
 
     docs = dup_docs.unionByName(
         spark.createDataFrame([(999_999, "one two")], "doc_id long, text string")
     )
-    jvm = {
-        r["id"]: r["sig"]
-        for r in minhash_signatures(docs, engine="jvm").collect()
+    hashes = defaultdict(list)
+    for r in word_shingles(docs).select(
+        "id", F.xxhash64("shingle").alias("h")
+    ).collect():
+        hashes[r["id"]].append(r["h"] % _MERSENNE)
+    params = _perm_params(32, 42)
+    expected = {
+        i: [min((a * h + b) % _MERSENNE for h in hs) for a, b in params]
+        for i, hs in hashes.items()
     }
-    arrow = {
-        r["id"]: r["sig"]
-        for r in minhash_signatures(docs, engine="arrow").collect()
-    }
-    assert jvm == arrow
-    assert arrow[999_999] == [None] * 32  # too short for 3-shingles
+    got = {r["id"]: r["sig"] for r in minhash_signatures(docs).collect()}
+    assert {i: got[i] for i in expected} == expected
+    assert got[999_999] == [None] * 32  # too short for 3-shingles
+    assert all(got[i] == [None] * 32 for i in got.keys() - expected.keys())
 
 
 def test_ngram_jaccard_pairs(spark, dup_docs):
@@ -291,23 +306,6 @@ def test_lsh_topk_recall_vs_brute_force(spark):
     # result must be a subset of per-bucket candidates.
     assert len(approx & exact) >= len(exact) // 3
     assert all(rank for rank in range(1, 4))
-
-
-def test_candidate_scorer_engines_agree(spark):
-    """ivf_topk and lsh_topk produce identical rankings under the
-    einsum scorer and the Catalyst fold on real embeddings."""
-    from htmlparser2_spark.operators.similarity import ivf_topk, lsh_topk
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 5)
-    c = emb.filter(F.col("vec_id") >= 5)
-    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-    for op, kw in ((ivf_topk, {}), (lsh_topk, {"dim": 64, "n_bits": 2})):
-        jvm = {key(r): (r["neighbor_id"], r["sim"])
-               for r in op(q, c, k=3, engine="jvm", **kw).collect()}
-        arrow = {key(r): (r["neighbor_id"], r["sim"])
-                 for r in op(q, c, k=3, engine="arrow", **kw).collect()}
-        assert jvm == arrow and jvm
 
 
 def test_brute_force_engines_agree(spark):
@@ -2440,11 +2438,11 @@ def test_ivfpq_probe_pruning(spark):
         assert (r["corpus_id"] - 100) % 4 == r["query_id"]  # own cell only
 
 
-def test_pq_encode_numpy_engine_matches_expression_engine(spark):
+def test_pq_encode_numpy_engine_matches_expression_engine(spark, monkeypatch):
     """Above the expression-size cap pq_encode switches to the Arrow/
     numpy argmin path; codes must be identical to the JVM path."""
     import random
-    from htmlparser2_spark.operators.similarity import pq_encode
+    from htmlparser2_spark.operators import similarity
 
     rng = random.Random(21)
     dim, m, k = 16, 4, 6
@@ -2458,9 +2456,10 @@ def test_pq_encode_numpy_engine_matches_expression_engine(spark):
         "vec_id long, embedding array<double>",
     )
     expr_codes = {r["vec_id"]: list(r["pq_code"]) for r in
-                  pq_encode(df, codebooks).collect()}
+                  similarity.pq_encode(df, codebooks).collect()}
+    monkeypatch.setattr(similarity, "_MAX_EXPR_CODEWORDS", 1)
     np_codes = {r["vec_id"]: list(r["pq_code"]) for r in
-                pq_encode(df, codebooks, max_expr_codewords=1).collect()}
+                similarity.pq_encode(df, codebooks).collect()}
     assert expr_codes == np_codes and len(expr_codes) == 50
 
 

@@ -2,14 +2,15 @@
 
 The round-4 verdict flagged the literal-replace encode plan as the
 repo's one scale-negative: a production 30k-merge vocabulary cannot be
-a 30k-deep Catalyst expression. operators/bpe.py now ships a dual
-engine; this harness measures the Arrow kernel's per-core work
+a 30k-deep Catalyst expression. operators/bpe.py encodes tables past
+``MAX_JVM_MERGES`` with an Arrow kernel; this harness measures its per-core work
 (``encode_text_py`` — the exact per-row function the pandas UDF runs)
 at a REALISTIC merge-table depth (8k+), demonstrating that encode cost
 is depth-independent: per distinct word it is pair-rank dict lookups,
 never one string scan per merge. For contrast it also replays the
-small-table sequential replace chain (the jvm engine's semantics) in
-pure Python at the jvm bound, whose cost IS linear in table depth.
+small-table sequential replace chain (the literal Catalyst chain's
+semantics) in pure Python at the bound, whose cost IS linear in table
+depth.
 
 Corpus/vocabulary are synthesized deterministically (seeded): the
 sf0.01 documents table's word list is only ~31 distinct words — far
@@ -109,7 +110,7 @@ def main(n_docs: int = 4000, repeats: int = 3) -> None:
             n += encode_text_py(t, ranks, cache=cache).count("{")
         return n
 
-    # jvm-engine semantics replayed in Python at the jvm bound — the
+    # literal-chain semantics replayed in Python at the bound — the
     # depth-LINEAR baseline the kernel replaces past MAX_JVM_MERGES.
     small = merges[:MAX_JVM_MERGES]
     reps = [("{%s}{%s}" % (l, r), "{%s%s}" % (l, r)) for _, l, r, _ in small]

@@ -1,19 +1,27 @@
-"""Rebuild the HTML fixture documents from their golden event streams.
+"""Rebuild the fixture documents from their golden event streams.
 
 ``tests/goldens/document_events.json`` holds, for each reference fixture
 document, the whole parser event stream with exact ``[startIndex,
-endIndex]`` positions. For the three HTML documents (Basic, Attributes,
-Svg) that stream determines the source text: every text span's length
-equals its data (no entities), and every tag, attribute, comment and
-doctype span has a single spelling up to letter case and the whitespace
-inside tags. This script lays each event's source spelling at its
-position, fills the in-tag gaps with spaces (a ``/`` before ``>`` for
-self-closing foreign elements), re-parses the result and checks that it
-reproduces the golden stream exactly, positions included, then writes
-``tests/fixtures/Documents/<file>``.
+endIndex]`` positions. That stream determines the source text of all
+six documents (Basic, Attributes, Svg in html mode; RSS, Atom, RDF in
+xml mode) up to letter case and the whitespace inside tags:
 
-The three feed documents are not rebuilt: 11 of their text spans carry
-entities whose raw spelling the events do not record.
+* every tag, attribute, comment and doctype span has a single spelling;
+* a text span whose length equals its data is the data itself;
+* in xml mode, a text span inside ``cdatastart``/``cdataend`` is
+  ``<![CDATA[data]]>``; the span after an ``<?xml ...?>`` processing
+  instruction starts on its closing ``>`` (the instruction's span ends
+  on the ``?``); any other text span longer than its data is the data
+  with ``&``, ``<`` and ``>`` escaped, which must fill the span exactly.
+
+This script lays each event's source spelling at its position, fills
+the in-tag gaps with spaces (a ``/`` before ``>`` for self-closing
+elements), re-parses the result and checks that it reproduces the
+golden stream exactly, positions included, then writes
+``tests/fixtures/Documents/<file>``. That check runs our own parser, so
+the files are validated partly by the engine under test; the feed
+files' independent check is tests/test_feed.py (reference FeedHandler
+snapshot values).
 
 Run from the repo root: python tools/rebuild_fixtures.py [--check]
 (``--check`` compares against the vendored files instead of writing).
@@ -29,11 +37,10 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
 from htmlparser2_spark.engine.collector import EventCollector  # noqa: E402
-from htmlparser2_spark.engine.parser import Parser  # noqa: E402
+from htmlparser2_spark.engine.parser import Parser, ParserOptions  # noqa: E402
 
 GOLDENS = ROOT / "tests" / "goldens" / "document_events.json"
 OUT = ROOT / "tests" / "fixtures" / "Documents"
-HTML_FILES = ("Basic.html", "Attributes.html", "Svg.html")
 
 
 def _attribute(name: str, value: str | None = None, *quote) -> str:
@@ -43,8 +50,12 @@ def _attribute(name: str, value: str | None = None, *quote) -> str:
     return f"{name}={q}{value}{q}"
 
 
+def _escape(text: str) -> str:
+    return text.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+
+
 def rebuild(events: list[dict]) -> str:
-    """Source text whose parse yields ``events`` (html mode)."""
+    """Source text whose parse yields ``events``."""
     size = max(e["endIndex"] for e in events) + 1
     chars: list[str | None] = [None] * size
     in_tag = [False] * size
@@ -57,15 +68,28 @@ def rebuild(events: list[dict]) -> str:
                 raise ValueError(f"position {i}: {chars[i]!r} vs {c!r}")
             chars[i] = c
 
+    prev = None
     for e, nxt in zip(events, events[1:] + [None]):
         kind, data = e["$event"], e["data"]
         start, end = e["startIndex"], e["endIndex"]
         if kind == "text":
-            put(start, data[0], end)
+            text = data[0]
+            if prev and prev["$event"] == "cdatastart":
+                text = f"<![CDATA[{text}]]>"
+            elif prev and prev["$event"] == "processinginstruction" and (
+                prev["data"][1].startswith("?")
+            ):
+                text = ">" + text  # the `>` of `?>` opens this span
+            elif end - start + 1 > len(text):
+                text = _escape(text)
+            put(start, text, end)
         elif kind == "comment":
             put(start, f"<!--{data[0]}-->", end)
         elif kind == "processinginstruction":
-            put(start, f"<{data[1]}>", end)
+            if data[1].startswith("?"):  # xml declaration: span ends on `?`
+                put(start, f"<{data[1]}?", end)
+            else:
+                put(start, f"<{data[1]}>", end)
         elif kind == "opentagname":
             put(start, "<" + data[0])
         elif kind == "attribute":
@@ -84,6 +108,7 @@ def rebuild(events: list[dict]) -> str:
                 put(end - 1, "/")
         elif kind == "closetag" and not data[1]:
             put(start, f"</{data[0]}>", end)
+        prev = e
     for i, c in enumerate(chars):
         if c is None:
             if not in_tag[i]:
@@ -92,9 +117,9 @@ def rebuild(events: list[dict]) -> str:
     return "".join(chars)
 
 
-def events_of(source: str) -> list[dict]:
+def events_of(source: str, xml_mode: bool = False) -> list[dict]:
     collector = EventCollector()
-    parser = Parser(collector)
+    parser = Parser(collector, ParserOptions(xml_mode=xml_mode))
     collector.attach(parser)
     parser.parse(source)
     return collector.events
@@ -102,11 +127,11 @@ def events_of(source: str) -> list[dict]:
 
 def main(argv: list[str]) -> int:
     check = "--check" in argv
-    cases = {c["file"]: c for c in json.loads(GOLDENS.read_text())}
     OUT.mkdir(parents=True, exist_ok=True)
-    for name in HTML_FILES:
-        source = rebuild(cases[name]["events"])
-        if events_of(source) != cases[name]["events"]:
+    for case in json.loads(GOLDENS.read_text()):
+        name, events = case["file"], case["events"]
+        source = rebuild(events)
+        if events_of(source, case["options"].get("xmlMode", False)) != events:
             print(f"{name}: rebuilt source does not reproduce the golden stream")
             return 1
         path = OUT / name
@@ -116,8 +141,7 @@ def main(argv: list[str]) -> int:
                 return 1
         else:
             path.write_text(source, encoding="utf-8")
-        print(f"{name}: {len(source)} chars, "
-              f"{len(cases[name]['events'])} events reproduced")
+        print(f"{name}: {len(source)} chars, {len(events)} events reproduced")
     return 0
 
 
