@@ -1,10 +1,12 @@
 """PDF / layout-parse plumbing over binary payload columns.
 
 The north rule lists "PDF/layout parse" alongside HTML extraction. No
-PDF codec ships in this container, so the decode step is a clearly
-marked deterministic stub behind the same mapInPandas contract the HTML
-path uses — swap ``_extract_pdf_text_stub`` for pdfminer/pypdf and every
-schema, batch shape, and downstream operator stays unchanged.
+PDF library is a dependency, so the decode step is a minimal text-operator
+parser (unfiltered and ``/FlateDecode`` streams, inflated with stdlib
+``zlib``) with a clearly marked deterministic stub fallback, behind the
+same mapInPandas contract the HTML path uses — swap
+``_extract_pdf_text_stub`` for pdfminer/pypdf and every schema, batch
+shape, and downstream operator stays unchanged.
 
 The layout model is the real contract: a PDF parses into *spans*
 ``(page_no, span_idx, kind, text, x0, y0, x1, y1)``; document text is
@@ -16,6 +18,7 @@ from __future__ import annotations
 
 import hashlib
 import re
+import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -47,6 +50,10 @@ SPAN_SCHEMA = StructType(
 
 
 _RE_STREAM = re.compile(rb"stream\r?\n(.*?)endstream", re.DOTALL)
+_RE_FILTER = re.compile(rb"/Filter\s*(/\w+|\[[^\]]*\])")
+# Inflated size cap per stream: a few KB of Flate data can expand to
+# gigabytes, and one such document must not take down a worker.
+_MAX_INFLATED = 16 << 20
 _RE_BT = re.compile(rb"BT(.*?)ET", re.DOTALL)
 # Text-object operators we understand: positioning (Td/TD/Tm/T*) and
 # show-text (Tj, ', TJ with an array of strings/kerns).
@@ -88,22 +95,48 @@ def _pdf_literal(raw: bytes) -> str:
     return out.decode("latin-1")
 
 
-def _extract_pdf_text_real(payload: bytes) -> list[dict]:
-    """Minimal REAL layout parser for uncompressed PDFs.
+def _inflate(body: bytes) -> bytes:
+    """zlib-inflate one stream body; ``b""`` when it is malformed,
+    truncated, or inflates past ``_MAX_INFLATED``."""
+    d = zlib.decompressobj()
+    try:
+        out = d.decompress(body, _MAX_INFLATED)
+    except zlib.error:
+        return b""
+    return out if d.eof else b""
 
-    Walks ``stream…endstream`` content streams (one page per stream),
-    interprets ``BT…ET`` text objects — ``Td``/``TD``/``Tm``/``T*``
+
+def _content_streams(payload: bytes) -> Iterator[bytes]:
+    """Every ``stream…endstream`` body, decoded: unfiltered streams as
+    they are, ``/FlateDecode`` ones inflated, and streams under any
+    other filter (or filter chain) empty. A stream's ``/Filter`` is the
+    last one named between the previous stream and its own keyword."""
+    prev = 0
+    for m in _RE_STREAM.finditer(payload):
+        filters = _RE_FILTER.findall(payload, prev, m.start())
+        prev = m.end()
+        if not filters:
+            yield m.group(1)
+        elif filters[-1].strip(b"[] \t\r\n") == b"/FlateDecode":
+            yield _inflate(m.group(1))
+        else:
+            yield b""
+
+
+def _extract_pdf_text_real(payload: bytes) -> list[dict]:
+    """Minimal REAL layout parser for unfiltered and FlateDecode PDFs.
+
+    Walks the content streams (:func:`_content_streams`, one page per
+    stream), interprets ``BT…ET`` text objects — ``Td``/``TD``/``Tm``/``T*``
     positioning, ``Tj``/``'``/``TJ`` show-text with escape and octal
     decoding — and emits one span per show-text operator positioned at
     the current text point (width estimated at 6pt/char, 12pt line
-    height: header-level layout, not glyph metrics). Compressed
-    (``/Filter``) streams carry no plain-text operators and simply
-    yield nothing here — a full pdfminer/pypdf replaces this in
-    production behind the same span schema.
+    height: header-level layout, not glyph metrics). Streams under
+    other filters yield nothing here — a full pdfminer/pypdf replaces
+    this in production behind the same span schema.
     """
     spans: list[dict] = []
-    for page_no, m in enumerate(_RE_STREAM.finditer(payload)):
-        body = m.group(1)
+    for page_no, body in enumerate(_content_streams(payload)):
         span_idx = 0
         for bt in _RE_BT.finditer(body):
             x, y = 0.0, 0.0
@@ -119,29 +152,17 @@ def _extract_pdf_text_real(payload: bytes) -> list[dict]:
                 elif op.group(10):  # T*
                     x = line_x
                     y -= 12.0
-                elif op.group(11):  # (…) Tj or '
-                    if op.group(12) == b"'":
-                        x = line_x
-                        y -= 12.0
-                    text = _pdf_literal(op.group(11))
-                    spans.append(
-                        {
-                            "page_no": page_no,
-                            "span_idx": span_idx,
-                            "kind": "text",
-                            "text": text,
-                            "x0": x,
-                            "y0": y,
-                            "x1": x + 6.0 * len(text),
-                            "y1": y + 12.0,
-                        }
-                    )
-                    span_idx += 1
-                elif op.group(13):  # [ … ] TJ
-                    text = "".join(
-                        _pdf_literal(lit.group(0))
-                        for lit in _RE_LITERAL.finditer(op.group(13))
-                    )
+                else:
+                    if op.group(11):  # (…) Tj or '
+                        if op.group(12) == b"'":
+                            x = line_x
+                            y -= 12.0
+                        text = _pdf_literal(op.group(11))
+                    else:  # [ … ] TJ
+                        text = "".join(
+                            _pdf_literal(lit.group(0))
+                            for lit in _RE_LITERAL.finditer(op.group(13))
+                        )
                     spans.append(
                         {
                             "page_no": page_no,
@@ -159,10 +180,10 @@ def _extract_pdf_text_real(payload: bytes) -> list[dict]:
 
 
 def _extract_pdf_text_stub(payload: bytes) -> list[dict]:
-    """PDF layout parse: REAL for uncompressed text operators
+    """PDF layout parse: REAL for unfiltered or Flate text operators
     (:func:`_extract_pdf_text_real`), deterministic STUB fallback when
     the document yields no parseable text objects (e.g. every stream is
-    compressed — no inflate codec pathway here).
+    under a filter other than ``/FlateDecode``).
 
     Raises ValueError on an invalid header exactly like a real parser.
     """

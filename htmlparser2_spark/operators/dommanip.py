@@ -15,7 +15,10 @@ mutation becomes a DataFrame transformation:
 * ``replace_element`` overwrites the matched row in place (same
   node_id/parent/idx — the replacement takes the element's position,
   exactly domutils' children-list swap) and drops the old element's
-  subtree, which leaves the tree with the replacement alone.
+  subtree — every row with a matched id in its ``ancestors``, so
+  ``replace_element`` needs a nodes table built ``with_ancestors=True``
+  (each insertion helper extends ``ancestors`` for its new rows, so the
+  column stays exact along a chain).
 
 Ordering contract after mutation: **document order is the (parent_id,
 idx_in_parent) tree walk, not node_id order** — freshly inserted ids are
@@ -27,9 +30,8 @@ consumers (``text_content_per_doc``) are only valid on unmutated tables.
 Scale: each insertion helper costs one per-url max aggregation, one
 broadcastable join of the (small) anchor set, and one window re-rank
 partitioned by (url, parent_id) — all key-local, no cross-document
-shuffle wider than the nodes table itself. ``replace_element`` adds the
-same bounded subtree-descent loop ``remove_elements`` uses (one
-frontier join per tree level).
+shuffle wider than the nodes table itself. ``replace_element`` is one
+window per document plus an in-row array test, with no depth bound.
 """
 
 from __future__ import annotations
@@ -37,6 +39,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .domquery import _outside_subtrees, _require_ancestors
 
 __all__ = [
     "append_child",
@@ -92,8 +96,7 @@ def _insert(
     references its input three times (rows, per-url max id, anchors),
     so a chain of k mutations over an un-materialized parse would
     re-run the upstream plan O(3^k) times — the checkpoint bounds it
-    to one materialization per mutation (linear in chain length), the
-    same lineage-truncation trade remove_elements already makes."""
+    to one materialization per mutation (linear in chain length)."""
     nodes = nodes.localCheckpoint(eager=False)
     anchors = nodes.filter(predicate(nodes))
     sel = [
@@ -192,47 +195,12 @@ def replace_element(nodes: DataFrame, predicate, spec: dict,
     takes the element's position in its parent (same node_id, parent_id,
     idx_in_parent); the old element leaves the tree WITH its subtree
     (domutils swaps the parent's child pointer — the detached element
-    keeps its children, so they are gone from the document)."""
-    from .domquery import _descendant_ids
-
-    # Same recompute bound as _insert: the input feeds the subtree
-    # closure, the anti-join, and the overwrite.
-    nodes = nodes.localCheckpoint(eager=False)
-    matched = nodes.filter(predicate(nodes)).select(
-        F.col(key_col).alias("rm_url"), F.col("node_id").alias("rm_id")
-    )
-    # Doomed = STRICT descendants of matched nodes — seeded from their
-    # children so a matched node nested inside another match stays in
-    # the doomed set and is dropped with the outer subtree.
-    # (_descendant_ids' include_roots=False subtracts ALL roots from
-    # the closure, which would resurrect such inner matches: replacing
-    # ul and li in <ul><li>x</li></ul> must yield one replacement, not
-    # a replacement inside a replacement.)
-    links = nodes.select(
-        F.col(key_col).alias("rm_url"),
-        F.col("parent_id").alias("rm_parent"),
-        F.col("node_id").alias("rm_child"),
-    )
-    seeds = matched.withColumnsRenamed(
-        {"rm_url": "seed_url", "rm_id": "seed_id"}
-    )
-    child_seed = (
-        links.join(
-            seeds,
-            (links.rm_url == seeds.seed_url)
-            & (links.rm_parent == seeds.seed_id),
-        )
-        .select(links.rm_url.alias("rm_url"),
-                F.col("rm_child").alias("rm_id"))
-        .distinct()
-    )
-    doomed = _descendant_ids(nodes, child_seed, key_col=key_col,
-                             include_roots=True)
-    kept = nodes.join(
-        doomed,
-        (nodes[key_col] == doomed.rm_url) & (nodes.node_id == doomed.rm_id),
-        "left_anti",
-    )
+    keeps its children, so they are gone from the document). A match
+    nested inside another match goes with the outer subtree. Requires
+    ``with_ancestors=True`` nodes: the subtree is every row with a
+    matched id in its ``ancestors``."""
+    _require_ancestors(nodes, "replace_element")
+    kept = _outside_subtrees(nodes, predicate, key_col, drop_roots=False)
     cond = predicate(kept)
     out = kept
     for name, col in _spec_cols(spec).items():

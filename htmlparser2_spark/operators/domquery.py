@@ -68,12 +68,16 @@ def get_elements_by_tag_name(nodes: DataFrame, name: str, *, limit: int | None =
     limit=0 returns no rows and limit=1 returns each document's first
     match."""
     out = nodes.filter(F.col("name") == name)
-    if limit is None:
-        return out
-    w = Window.partitionBy("url").orderBy("node_id")
+    return out if limit is None else _first_rows(out, limit, "url")
+
+
+def _first_rows(rows: DataFrame, n: int, *keys: str) -> DataFrame:
+    """The first ``n`` rows per ``keys`` group in document (node_id)
+    order — one window pass."""
+    w = Window.partitionBy(*keys).orderBy("node_id")
     return (
-        out.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= limit)
+        rows.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= n)
         .drop("__rn")
     )
 
@@ -90,8 +94,7 @@ def get_element_by_id(nodes: DataFrame, element_id: str) -> DataFrame:
     """First element with the id per document (ids should be unique; ties
     break on document order like domutils' depth-first search)."""
     hits = nodes.filter(F.col("attrs")["id"] == element_id)
-    w = Window.partitionBy("url").orderBy("node_id")
-    return hits.withColumn("rn", F.row_number().over(w)).filter("rn = 1").drop("rn")
+    return _first_rows(hits, 1, "url")
 
 
 def find_all(nodes: DataFrame, predicate) -> DataFrame:
@@ -107,13 +110,7 @@ def find_one(nodes: DataFrame, predicate) -> DataFrame:
     over matches is the same element (reference re-export:
     /root/reference/src/index.ts:86).
     """
-    w = Window.partitionBy("url").orderBy("node_id")
-    return (
-        nodes.filter(predicate(nodes))
-        .withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .drop("rn")
-    )
+    return _first_rows(nodes.filter(predicate(nodes)), 1, "url")
 
 
 def exists_one(nodes: DataFrame, predicate) -> DataFrame:
@@ -182,6 +179,7 @@ def elements_inside(
     (``.drop_duplicates(subset=[key_col, "node_id"])`` for
     element-distinct semantics).
     """
+    _require_ancestors(nodes, "elements_inside")
     inner = nodes.filter(F.col("name") == inner_name)
     outer = nodes.filter(F.col("name") == outer_name).select(
         key_col, F.col("node_id").alias("ancestor_id")
@@ -206,6 +204,7 @@ def anchor_texts(nodes: DataFrame, key_col: str = "url") -> DataFrame:
     aggregation stays a single map-side-combined shuffle. Anchors with
     no text descendants still appear (empty string), via a left join
     from the anchor set."""
+    _require_ancestors(nodes, "anchor_texts")
     anchors = nodes.filter(
         (F.col("name") == "a") & F.col("attrs")["href"].isNotNull()
     ).select(
@@ -287,76 +286,45 @@ def inner_html(pages: DataFrame, *, tag: str = "body", html_col: str = "html",
     return pages.withColumn("inner_html", render(F.col(html_col)))
 
 
-def _descendant_ids(
-    nodes: DataFrame,
-    roots: DataFrame,
-    *,
-    key_col: str = "url",
-    include_roots: bool = True,
-) -> DataFrame:
-    """Subtree closure: ``(rm_url, rm_id)`` rows covering every node at
-    or under the ``roots`` seed rows (same two-column shape). Resolved
-    iteratively (bounded by tree depth) with a self-join per level — the
-    relational analogue of domutils' in-memory pointer walk. Shared by
-    :func:`remove_elements` and dommanip.replace_element.
+def _require_ancestors(nodes: DataFrame, what: str) -> None:
+    """The one precondition of every descendant-axis operator: the nodes
+    table carries the root-first ``ancestors`` id stack."""
+    if "ancestors" not in nodes.columns:
+        raise ValueError(
+            f"{what} needs a nodes table built with "
+            "dom_nodes_udf(with_ancestors=True)"
+        )
 
-    Each round joins only the FRONTIER (nodes discovered last round) —
-    re-joining the whole accumulated set would redo O(depth x |roots|)
-    work for chain-shaped subtrees. localCheckpoint per round truncates
-    lineage — iterative self-joins otherwise stack plans exponentially.
-    """
-    # Renamed projection avoids ambiguous self-join resolution.
-    links = nodes.select(
-        F.col(key_col).alias("rm_url"),
-        F.col("parent_id").alias("rm_parent"),
-        F.col("node_id").alias("rm_child"),
+
+def _outside_subtrees(nodes: DataFrame, predicate, key_col: str, *,
+                      drop_roots: bool) -> DataFrame:
+    """Rows of ``nodes`` under no ``predicate`` match (and, with
+    ``drop_roots``, not a match either). X lies in R's subtree iff R is
+    in X's ``ancestors``, so one window per document gathers the matched
+    ids and an in-row ``arrays_overlap`` tests each row — no closure
+    loop, no action, no depth cap. A match nested inside another match
+    is under it, so it goes with the outer subtree in both modes. Shared
+    by :func:`remove_elements` and dommanip.replace_element."""
+    path = (
+        F.concat("ancestors", F.array("node_id")) if drop_roots
+        else F.col("ancestors")
     )
-    seen = roots.localCheckpoint(eager=True)
-    frontier = seen
-    converged = False
-    # Max ~20 levels covers real-world DOM depth; the loop normally ends
-    # earlier, when the frontier empties.
-    for _ in range(21):
-        child_hits = links.join(
-            frontier,
-            (links.rm_url == frontier.rm_url)
-            & (links.rm_parent == frontier.rm_id),
-        ).select(links.rm_url.alias("rm_url"), F.col("rm_child").alias("rm_id"))
-        frontier = (
-            child_hits.join(seen, ["rm_url", "rm_id"], "left_anti")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if frontier.count() == 0:
-            converged = True
-            break
-        seen = seen.unionByName(frontier).localCheckpoint(eager=True)
-    if not converged:
-        # Silent truncation would leave deep descendants alive in
-        # downstream extraction — fail loudly.
-        raise RuntimeError(
-            "subtree expansion did not converge within 20 rounds; a "
-            "matched subtree is deeper than the cap"
-        )
-    if include_roots:
-        return seen
-    return seen.join(roots, ["rm_url", "rm_id"], "left_anti")
+    roots = F.collect_set(
+        F.when(predicate(nodes), F.col("node_id"))
+    ).over(Window.partitionBy(key_col))
+    return (
+        nodes.withColumn("__roots", roots)
+        .filter(~F.arrays_overlap(path, F.col("__roots")))
+        .drop("__roots")
+    )
 
 
 def remove_elements(nodes: DataFrame, predicate) -> DataFrame:
     """removeElement-equivalent: drop matching elements AND their
-    subtrees (subtree closure via :func:`_descendant_ids`)."""
-    doomed = _descendant_ids(
-        nodes,
-        nodes.filter(predicate(nodes)).select(
-            F.col("url").alias("rm_url"), F.col("node_id").alias("rm_id")
-        ),
-    )
-    return nodes.join(
-        doomed,
-        (nodes.url == doomed.rm_url) & (nodes.node_id == doomed.rm_id),
-        "left_anti",
-    )
+    subtrees. Requires ``with_ancestors=True`` nodes (the subtree test
+    is ancestor-array membership, see :func:`_outside_subtrees`)."""
+    _require_ancestors(nodes, "remove_elements")
+    return _outside_subtrees(nodes, predicate, "url", drop_roots=True)
 
 
 def find_one_child(nodes: DataFrame, predicate) -> DataFrame:
@@ -366,13 +334,7 @@ def find_one_child(nodes: DataFrame, predicate) -> DataFrame:
     single child array; partitioning by the parent instead of the url
     gives every parent its own answer in one window pass (reference
     re-export: /root/reference/src/index.ts:86)."""
-    w = Window.partitionBy("url", "parent_id").orderBy("node_id")
-    return (
-        nodes.filter(predicate(nodes))
-        .withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .drop("rn")
-    )
+    return _first_rows(nodes.filter(predicate(nodes)), 1, "url", "parent_id")
 
 
 def has_attrib(nodes: DataFrame, attr: str) -> DataFrame:
@@ -443,6 +405,7 @@ def remove_subsets(nodes: DataFrame) -> DataFrame:
     the candidate ancestor's id in the row's root-first ``ancestors``
     array — no tree walk, and the join key (url) keeps all comparisons
     document-local at 100 TB."""
+    _require_ancestors(nodes, "remove_subsets")
     cand = nodes.select(
         F.col("url").alias("rs_url"), F.col("node_id").alias("rs_id")
     )
@@ -483,6 +446,8 @@ def compare_document_position(
 
     Output: (url, a_id, b_id, <mask_col>).
     """
+    _require_ancestors(a, "compare_document_position")
+    _require_ancestors(b, "compare_document_position")
     left = a.select(
         F.col("url").alias("url"),
         F.col("node_id").alias("a_id"),

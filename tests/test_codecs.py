@@ -5,13 +5,17 @@ back to the documented deterministic stubs."""
 
 from __future__ import annotations
 
+import re
 import struct
 import zlib
 
 import pytest
 
 from htmlparser2_spark.functions.multimodal import _decode_audio, _decode_image
-from htmlparser2_spark.functions.pdf import _extract_pdf_text_stub
+from htmlparser2_spark.functions.pdf import (
+    _MAX_INFLATED,
+    _extract_pdf_text_stub,
+)
 
 
 def make_png(width: int, height: int, color_type: int = 6) -> bytes:
@@ -101,9 +105,10 @@ def test_unknown_formats_fall_back_to_stub_deterministically():
     assert x == _decode_audio(b"\x00opus-or-something")
 
 
-def _pdf(content: bytes) -> bytes:
+def _pdf(content: bytes, filters: bytes = b"") -> bytes:
     stream = (
-        b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
+        b"<< /Length %d %s>>\nstream\n" % (len(content), filters)
+        + content + b"\nendstream"
     )
     return b"%PDF-1.4\n1 0 obj\n" + stream + b"\nendobj\ntrailer"
 
@@ -136,6 +141,36 @@ def test_pdf_multi_stream_pages():
     )
     spans = _extract_pdf_text_stub(p)
     assert [(s["page_no"], s["text"]) for s in spans] == [(0, "pg0"), (1, "pg1")]
+
+
+def test_pdf_flate_stream_yields_real_spans():
+    content = b"BT 72 700 Td (Deflated text) Tj 0 -14 TD (two) Tj ET"
+    for filters in (b"/Filter /FlateDecode ", b"/Filter [ /FlateDecode ] "):
+        spans = _extract_pdf_text_stub(_pdf(zlib.compress(content), filters))
+        assert [(s["text"], s["x0"], s["y0"]) for s in spans] == [
+            ("Deflated text", 72.0, 700.0),
+            ("two", 72.0, 686.0),
+        ]
+
+
+def test_pdf_unreadable_streams_fall_back_to_stub():
+    """Other filters, filter chains, corrupt or truncated Flate data and
+    streams inflating past the size cap yield no spans of their own, so
+    the document gets the stub spans — never an exception."""
+    text = zlib.compress(b"BT 0 0 Td (hidden) Tj ET")
+    bomb = zlib.compress(b"BT (x) Tj ET" + b" " * _MAX_INFLATED)
+    cases = [
+        _pdf(b"BT 0 0 Td (hidden) Tj ET", b"/Filter /ASCIIHexDecode "),
+        _pdf(text, b"/Filter [/FlateDecode /ASCII85Decode] "),
+        _pdf(b"\x00not zlib at all", b"/Filter /FlateDecode "),
+        _pdf(text[: len(text) // 2], b"/Filter /FlateDecode "),
+        _pdf(bomb, b"/Filter /FlateDecode "),
+    ]
+    for payload in cases:
+        spans = _extract_pdf_text_stub(payload)
+        assert spans and all(
+            re.fullmatch(r"p\ds\d:[0-9a-f]{8}", s["text"]) for s in spans
+        ), spans
 
 
 def test_pdf_without_text_objects_falls_back_to_stub():

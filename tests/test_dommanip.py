@@ -18,7 +18,10 @@ from htmlparser2_spark.operators.dommanip import (
     replace_element,
     serialize_nodes,
 )
-from htmlparser2_spark.operators.domquery import explode_nodes
+from htmlparser2_spark.operators.domquery import (
+    explode_nodes,
+    remove_elements,
+)
 
 HTML = (
     '<html><body><h1>T</h1><p>one</p><style>x { }</style>'
@@ -62,7 +65,7 @@ def _mutate(nodes):
 
 @pytest.mark.spark
 def test_manip_serialize_roundtrip(spark):
-    nodes = _mutate(explode_nodes(_pages(spark)))
+    nodes = _mutate(explode_nodes(_pages(spark), with_ancestors=True))
     out = serialize_nodes(nodes).collect()
     assert len(out) == 1
     assert out[0]["manip_html"] == EXPECTED
@@ -72,7 +75,7 @@ def test_manip_serialize_roundtrip(spark):
 def test_manip_reparse_fixed_point(spark):
     """Serialized mutated markup reparses to a DOM that serializes
     identically (the serializer contract is a fixed point)."""
-    nodes = _mutate(explode_nodes(_pages(spark)))
+    nodes = _mutate(explode_nodes(_pages(spark), with_ancestors=True))
     rendered = serialize_nodes(nodes).collect()[0]["manip_html"]
     pages2 = _pages(spark, html=rendered)
     again = serialize_nodes(explode_nodes(pages2)).collect()[0]["manip_html"]
@@ -108,8 +111,9 @@ def test_insert_orders_and_ancestors(spark):
 def test_mutation_fuzz_invariants(spark):
     """Seeded random op chains over random safe trees: after any chain,
     (a) idx_in_parent is dense 0..k-1 per parent, (b) every parent_id
-    exists (or is -1), (c) node_ids are unique, and (d) the mutated
-    table serializes -> reparses to the same element-name multiset and
+    exists (or is -1), (c) node_ids are unique, (d) ``ancestors`` is
+    the root-first parent_id chain, and (e) the mutated table
+    serializes -> reparses to the same element-name multiset and
     textContent."""
     import random
 
@@ -127,7 +131,7 @@ def test_mutation_fuzz_invariants(spark):
             docs.append((f"u{d}", "<html><body>"
                          + "".join(parts) + "</body></html>"))
         pages = spark.createDataFrame(docs, "url string, html string")
-        nodes = explode_nodes(pages)
+        nodes = explode_nodes(pages, with_ancestors=True)
         ops = [
             lambda n: append_child(
                 n, lambda x: F.col("name") == rng.choice(tags),
@@ -145,6 +149,10 @@ def test_mutation_fuzz_invariants(spark):
                 n, lambda x: F.col("name") == rng.choice(tags),
                 {"type": "text", "data": "B "},
             ),
+            lambda n: replace_element(
+                n, lambda x: F.col("name") == rng.choice(tags),
+                {"type": "tag", "name": "section"},
+            ),
         ]
         rng.shuffle(ops)
         for op in ops[: rng.randint(2, 4)]:
@@ -157,6 +165,16 @@ def test_mutation_fuzz_invariants(spark):
             ids = [r["node_id"] for r in rs]
             assert len(ids) == len(set(ids)), f"{url}: duplicate node_ids"
             id_set = set(ids)
+            by_id = {r["node_id"]: r for r in rs}
+            for r in rs:
+                chain = []
+                pid = r["parent_id"]
+                while pid != -1:
+                    chain.append(pid)
+                    pid = by_id[pid]["parent_id"]
+                assert list(r["ancestors"]) == chain[::-1], (
+                    f"{url} node {r['node_id']}: stale ancestors"
+                )
             kids: dict[int, list[int]] = {}
             for r in rs:
                 assert r["parent_id"] == -1 or r["parent_id"] in id_set
@@ -206,7 +224,7 @@ def _doc_order_key(row, rows):
 @pytest.mark.spark
 def test_replace_drops_subtree(spark):
     html = "<html><body><div><p>inner<b>deep</b></p></div><p>keep</p></body></html>"
-    nodes = explode_nodes(_pages(spark, html=html))
+    nodes = explode_nodes(_pages(spark, html=html), with_ancestors=True)
     out = replace_element(
         nodes, lambda n: F.col("name") == "div",
         {"type": "tag", "name": "section"},
@@ -224,10 +242,110 @@ def test_replace_nested_match_drops_inner(spark):
     replaced (domutils replaces the outer pointer; the detached
     element keeps its children, inner match included)."""
     html = "<html><body><ul><li>x</li></ul><p>keep</p></body></html>"
-    nodes = explode_nodes(_pages(spark, html=html))
+    nodes = explode_nodes(_pages(spark, html=html), with_ancestors=True)
     out = replace_element(
         nodes, lambda n: F.col("name").isin("ul", "li"),
         {"type": "tag", "name": "gone"},
     )
     rendered = serialize_nodes(out).collect()[0]["manip_html"]
     assert rendered == "<html><body><gone></gone><p>keep</p></body></html>"
+
+
+def _chain(depth: int) -> str:
+    return (
+        "<html><body>" + "<div>" * depth + "x" + "</div>" * depth
+        + "</body></html>"
+    )
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("depth", [25, 500])
+def test_replace_and_remove_deep_chains(spark, depth):
+    """Subtree removal has no depth cap: a nested <div> chain far deeper
+    than real pages goes in one pass for both operators."""
+    nodes = explode_nodes(
+        _pages(spark, html=_chain(depth)), with_ancestors=True
+    )
+    body = lambda n: F.col("name") == "body"  # noqa: E731
+    replaced = replace_element(nodes, body, {"type": "tag", "name": "main"})
+    assert serialize_nodes(replaced).collect()[0]["manip_html"] == (
+        "<html><main></main></html>"
+    )
+    removed = remove_elements(nodes, lambda n: F.col("name") == "div")
+    assert serialize_nodes(removed).collect()[0]["manip_html"] == (
+        "<html><body></body></html>"
+    )
+    assert remove_elements(nodes, body).count() == 1  # <html> alone
+
+
+@pytest.mark.spark
+def test_subtree_ops_submit_no_job(spark):
+    """replace_element and remove_elements only build a plan: the call
+    itself runs no Spark job (the job group sees jobs only once the
+    result is collected)."""
+    sc = spark.sparkContext
+    nodes = explode_nodes(_pages(spark, html=_chain(30)), with_ancestors=True)
+    group = "subtree-ops-lazy"
+    sc.setJobGroup(group, "laziness check")
+    try:
+        out = replace_element(
+            nodes, lambda n: F.col("name") == "div",
+            {"type": "tag", "name": "main"},
+        )
+        out = remove_elements(out, lambda n: F.col("name") == "main")
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert out.count() == 2  # <html><body>
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.mark.spark
+def test_remove_elements_drops_subtrees(spark):
+    """removeElement: the match and everything under it go, a match
+    nested in another match goes with the outer one, and documents
+    without a match keep every row."""
+    pages = spark.createDataFrame(
+        [
+            ("u1", "<html><body><div><p>in<b>deep</b></p></div>"
+                   "<p>keep</p></body></html>"),
+            ("u2", "<html><body><ul><li>x</li></ul><p>keep</p>"
+                   "</body></html>"),
+            ("u3", "<html><body><p>other</p></body></html>"),
+        ],
+        "url string, html string",
+    )
+    nodes = explode_nodes(pages, with_ancestors=True)
+    out = remove_elements(
+        nodes, lambda n: F.col("name").isin("div", "ul", "li")
+    )
+    got = {
+        r["url"]: r["manip_html"] for r in serialize_nodes(out).collect()
+    }
+    assert got == {
+        "u1": "<html><body><p>keep</p></body></html>",
+        "u2": "<html><body><p>keep</p></body></html>",
+        "u3": "<html><body><p>other</p></body></html>",
+    }
+    assert out.filter(F.col("url") == "u3").count() == (
+        nodes.filter(F.col("url") == "u3").count()
+    )
+
+
+def test_subtree_ops_require_ancestors():
+    from htmlparser2_spark.operators import domquery
+
+    class _Fake:
+        columns = ["url", "node_id", "parent_id"]
+
+    calls = [
+        lambda: replace_element(_Fake(), None, {}),
+        lambda: remove_elements(_Fake(), None),
+        lambda: domquery.elements_inside(_Fake(), "ul", "li"),
+        lambda: domquery.anchor_texts(_Fake()),
+        lambda: domquery.remove_subsets(_Fake()),
+        lambda: domquery.compare_document_position(_Fake(), _Fake()),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="with_ancestors"):
+            call()
